@@ -22,6 +22,8 @@ Documented divergences from the reference (SURVEY §7 risks):
 
 from __future__ import annotations
 
+import functools
+import operator
 import re
 import urllib.parse
 from dataclasses import dataclass, field
@@ -30,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _SEG_RE = re.compile(r"(?:^|/)([^/=]+)=([^/]*)")
+_IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
 def _naive_utc(v):
@@ -397,12 +400,22 @@ class PartitionSchema:
         """Partial spec → conjunctive filter on partition columns.
         On a hive-layout read, Catalyst converts this to directory
         pruning (PartitionFilters) — the scalable form of the
-        reference's glob-based pruning (README.md:137-147)."""
-        cond = F.lit(True)
+        reference's glob-based pruning (README.md:137-147).
+
+        Int values on plain identifier keys go into ONE ``F.expr``
+        (3 py4j round-trips in all, vs 5 per key for ``col == lit``
+        conjuncts); any other value keeps the Column form, so no value
+        is ever quoted into SQL text."""
+        sql, cols = [], []
         for k, v in partial.items():
             self._field(k)  # validate key exists
-            cond = cond & (F.col(k) == F.lit(v))
-        return cond
+            if isinstance(v, int) and not isinstance(v, bool) and _IDENT_RE.fullmatch(k):
+                sql.append(f"`{k}` = {int(v)}")
+            else:
+                cols.append(F.col(k) == F.lit(v))
+        if sql:
+            cols.insert(0, F.expr(" AND ".join(sql)))
+        return functools.reduce(operator.and_, cols) if cols else F.lit(True)
 
     def apply(self, df: DataFrame, key: str = "key", validate: bool = True) -> DataFrame:
         """Attach typed partition columns (+ ``_valid``) to a keys DF.

@@ -98,10 +98,15 @@ class TimePartitioner:
 
     def range_paths(self, start: datetime, end: datetime) -> list[str]:
         """Inclusive range → one path per step
-        (reference generatePathsForRange, src/index.ts:1944-1971)."""
+        (reference generatePathsForRange, src/index.ts:1944-1971).
+
+        Endpoints are normalized to target-timezone wall time BEFORE
+        truncating (like :meth:`paths_df`), so buckets follow the
+        target zone's calendar and the range runs from
+        ``path_for(start)`` to ``path_for(end)``."""
         out = []
-        cur = self._truncate(start)
-        end_t = self._truncate(end)
+        cur = self._truncate(self._wall(start))
+        end_t = self._truncate(self._wall(end))
         while cur <= end_t:
             out.append(self.path_for(cur))
             cur = self._step(cur)
@@ -173,32 +178,27 @@ class TimePartitioner:
     def range_filter(self, start: datetime, end: datetime) -> Column:
         """Pruning predicate on hive partition columns (year/month/...)
         for an inclusive range — Catalyst turns this into directory
-        pruning on partitioned scans. Uses a lexicographic tuple
-        comparison built from the granularity's components."""
+        pruning on partitioned scans and Parquet row-group skipping on
+        flat files. Endpoints are normalized like :meth:`range_paths`
+        (aware → target-timezone wall time), so the filter selects
+        exactly the partitions that method lists.
+
+        The lexicographic tuple bounds are built in the O(k) nested form
+        ``y > lo_y OR (y = lo_y AND (m > lo_m OR (m = lo_m AND ...)))``
+        as ONE ``F.expr`` over ints: each Column call is a py4j
+        round-trip, so an hourly window built from Columns costs
+        hundreds of them (~0.1–0.2 s); the expression costs 3."""
         comps = [k for k, _ in self._components() if k != "minute"]
-        lo = self._truncate(start)
-        hi = self._truncate(end)
+        lo = self._truncate(self._wall(start))
+        hi = self._truncate(self._wall(end))
 
-        def tup(dt: datetime) -> list[int]:
-            vals = {"year": dt.year, "month": dt.month, "day": dt.day, "hour": dt.hour}
-            return [vals[k] for k in comps]
+        def bound(dt: datetime, op: str) -> str:
+            # ``op`` is the strict comparison; the last component
+            # closes the range with its inclusive form (``>=``/``<=``)
+            vals = [int(getattr(dt, k)) for k in comps]
+            expr = f"`{comps[-1]}` {op}= {vals[-1]}"
+            for k, v in zip(reversed(comps[:-1]), reversed(vals[:-1])):
+                expr = f"`{k}` {op} {v} OR (`{k}` = {v} AND ({expr}))"
+            return f"({expr})"
 
-        lo_t, hi_t = tup(lo), tup(hi)
-        # build (cols) BETWEEN lo_t AND hi_t lexicographically
-        ge = F.lit(False)
-        le = F.lit(False)
-        for i in range(len(comps)):
-            eq_prefix = F.lit(True)
-            for j in range(i):
-                eq_prefix = eq_prefix & (F.col(comps[j]) == F.lit(lo_t[j]))
-            ge = ge | (eq_prefix & (F.col(comps[i]) > F.lit(lo_t[i])))
-            eq_prefix_hi = F.lit(True)
-            for j in range(i):
-                eq_prefix_hi = eq_prefix_hi & (F.col(comps[j]) == F.lit(hi_t[j]))
-            le = le | (eq_prefix_hi & (F.col(comps[i]) < F.lit(hi_t[i])))
-        eq_lo = F.lit(True)
-        eq_hi = F.lit(True)
-        for j, k in enumerate(comps):
-            eq_lo = eq_lo & (F.col(k) == F.lit(lo_t[j]))
-            eq_hi = eq_hi & (F.col(k) == F.lit(hi_t[j]))
-        return (ge | eq_lo) & (le | eq_hi)
+        return F.expr(f"{bound(lo, '>')} AND {bound(hi, '<')}")

@@ -75,6 +75,18 @@ def get_spark(
         # the Sort survived because this flag defaults false).
         # Measured sf10: r10 warm detect 14.7 -> 12.6 s min-of-3.
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+        # no Python call-site capture per Column call. With it on
+        # (PySpark's default) every Column-API call is wrapped to walk
+        # the Python stack and send it to the JVM: ~10 extra py4j
+        # round-trips per call (F.col: 13 instead of 3), which made up
+        # most of a catalog request's ~1 100 round-trips. Cost: Spark
+        # analysis errors lose their Python "DataFrame context" lines.
+        # extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+        # "true"} turns it back on. It is a static conf (fixed when the
+        # session is created) and PySpark reads it ONCE per process
+        # (pyspark.errors.utils._enable_debugging_cache) at the first
+        # Column call, so set it before that call.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # non-local deployments: executors are separate processes that
         # do NOT inherit this driver's environment — carry the
         # one-BLAS-thread-per-worker cap (see module header) with the

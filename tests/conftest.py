@@ -19,3 +19,32 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+class Py4jCallCounter:
+    """Counts Python→JVM round-trips: ``calls(fn, *args)`` runs ``fn``
+    and returns how many py4j commands it sent."""
+
+    def __init__(self):
+        self.n = 0
+
+    def calls(self, fn, *args, **kwargs) -> int:
+        before = self.n
+        fn(*args, **kwargs)
+        return self.n - before
+
+
+@pytest.fixture
+def py4j_calls(spark, monkeypatch):
+    """Wrap the session's ``GatewayClient.send_command`` so a test can
+    hold a code path to a py4j round-trip budget."""
+    client = spark.sparkContext._gateway._gateway_client
+    counter = Py4jCallCounter()
+    send = client.send_command
+
+    def counting_send(*args, **kwargs):
+        counter.n += 1
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting_send)
+    return counter

@@ -109,15 +109,20 @@ def test_range_filter_prunes(spark, tmp_path):
     got = spark.read.parquet(out).filter(tp.range_filter(start, end)).count()
     want = ev.filter((F.to_date("ts") >= "2024-01-03") & (F.to_date("ts") <= "2024-01-05")).count()
     assert got == want and got > 0
-    # the filter must actually prune partitions in the plan
-    plan = (
-        spark.read.parquet(out)
-        .filter(tp.range_filter(start, end))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters: [" in plan
+    # the filter must actually prune partitions in the plan: a
+    # non-empty PartitionFilters list naming the partition columns
+    # (read off the scan node — the plan string truncates it)
+    df = spark.read.parquet(out).filter(tp.range_filter(start, end))
+    part = _scan_node(df._jdf.queryExecution().executedPlan()).partitionFilters().toString()
+    assert part != "List()", part
+    assert all(k in part for k in ("year", "month", "day")), part
+
+
+def _scan_node(plan):
+    """The file scan under a (possibly adaptive) single-scan plan."""
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan.collectLeaves().apply(0)
 
 
 def test_path_col_non_utc_parity(spark):
@@ -162,3 +167,151 @@ def test_paths_df_agrees_with_range_paths_non_utc(spark):
     assert [
         r["path"] for r in tp.paths_df(spark, aware, aware_end).orderBy("ts").collect()
     ] == tp.range_paths(aware, aware_end)
+
+
+# ----------------------------------------------------------------------
+# range_filter ≡ pure-Python tuple range; timezone handling; pushdown
+# ----------------------------------------------------------------------
+_KEYS = ("year", "month", "day", "hour")
+
+
+def _hour_grid(spark, start: datetime, hours: int):
+    """One row per wall-clock hour: (year, month, day, hour) ints."""
+    from datetime import timedelta
+
+    rows = [
+        (d.year, d.month, d.day, d.hour)
+        for d in (start + timedelta(hours=i) for i in range(hours))
+    ]
+    return rows, spark.createDataFrame(
+        rows, "year int, month int, day int, hour int"
+    ).cache()
+
+
+def _selected(df, conds: list) -> list[list[tuple]]:
+    """Rows each predicate keeps — all predicates in one job. A
+    predicate that yields NULL on a row fails the test, not the row."""
+    got = df.select(*_KEYS, *[c.alias(f"c{i}") for i, c in enumerate(conds)]).collect()
+    out = []
+    for i in range(len(conds)):
+        assert all(r[f"c{i}"] is not None for r in got)
+        out.append(sorted(tuple(r[k] for k in _KEYS) for r in got if r[f"c{i}"]))
+    return out
+
+
+def test_range_filter_equals_tuple_range_oracle(spark):
+    """Every granularity over an hourly grid that crosses a year
+    boundary, month ends and Feb 29, against a lexicographic tuple
+    range on the driver — including lo == hi and lo > hi (empty)."""
+    import random
+
+    rows, df = _hour_grid(spark, datetime(2023, 12, 28), 24 * 70)
+    rng = random.Random(11)
+    windows = [
+        (datetime(2023, 12, 31, 23), datetime(2024, 1, 1, 0)),  # year edge
+        (datetime(2024, 1, 31, 22, 15), datetime(2024, 2, 1, 1)),  # month end
+        (datetime(2024, 2, 28, 5), datetime(2024, 3, 1, 2)),  # leap day
+        (datetime(2024, 1, 15, 7, 40), datetime(2024, 1, 15, 7, 5)),  # lo == hi bucket
+        (datetime(2024, 1, 15, 7), datetime(2024, 1, 15, 7)),  # lo == hi instant
+        (datetime(2024, 2, 3, 4), datetime(2024, 1, 9, 6)),  # lo > hi
+        (datetime(2023, 12, 1), datetime(2024, 12, 31, 23)),  # whole grid
+    ]
+    for _ in range(6):
+        a, b = (
+            datetime(2023, 12, 28) + rng.random() * (datetime(2024, 3, 8) - datetime(2023, 12, 28))
+            for _ in range(2)
+        )
+        windows.append((a, b))
+    cases, conds = [], []
+    for g in ("hourly", "daily", "monthly", "yearly"):
+        tp = TimePartitioner(g)
+        n = len([k for k, _ in tp._components() if k != "minute"])
+        for lo, hi in windows:
+            lo_t = tuple(getattr(tp._truncate(lo), k) for k in _KEYS[:n])
+            hi_t = tuple(getattr(tp._truncate(hi), k) for k in _KEYS[:n])
+            want = sorted(r for r in rows if lo_t <= r[:n] <= hi_t)
+            assert want or lo_t > hi_t  # only inverted windows are empty
+            cases.append((g, lo, hi, want))
+            conds.append(tp.range_filter(lo, hi))
+    for (g, lo, hi, want), got in zip(cases, _selected(df, conds)):
+        assert got == want, (g, lo, hi)
+    df.unpersist()
+
+
+def test_range_filter_honors_timezone_for_aware_endpoints(spark):
+    """Aware endpoints are converted to the partitioner's zone, so the
+    filter keeps exactly the partitions :meth:`range_paths` lists;
+    naive endpoints are target wall time, unconverted."""
+    from datetime import timezone
+
+    rows, df = _hour_grid(spark, datetime(2024, 3, 8), 24 * 5)  # spans US DST start
+    start = datetime(2024, 3, 9, 0, tzinfo=timezone.utc)
+    end = datetime(2024, 3, 10, 12, tzinfo=timezone.utc)
+    naive_start, naive_end = datetime(2024, 3, 9, 0), datetime(2024, 3, 10, 12)
+    cases, conds = [], []
+    for tz in ("Asia/Tokyo", "America/New_York"):
+        for g in ("hourly", "daily"):
+            tp = TimePartitioner(g, timezone=tz)
+            n = len(tp._components())
+            for lo, hi in ((start, end), (naive_start, naive_end)):
+                paths = set(tp.range_paths(lo, hi))
+                want = sorted(
+                    r
+                    for r in rows
+                    if "/".join(f"{k}={v:02d}" for k, v in zip(_KEYS[:n], r[:n])) in paths
+                )
+                cases.append((tz, g, lo, want))
+                conds.append(tp.range_filter(lo, hi))
+    for (tz, g, lo, want), got in zip(cases, _selected(df, conds)):
+        assert got == want and got, (tz, g, lo)
+    # the reported case: UTC midnight is 09:00 in Tokyo
+    tokyo = TimePartitioner("hourly", timezone="Asia/Tokyo")
+    [hit] = _selected(df, [tokyo.range_filter(start, start)])
+    assert hit == [(2024, 3, 9, 9)] and tokyo.range_paths(start, start)[0].endswith("hour=09")
+    df.unpersist()
+
+
+def test_range_filter_pushes_down_and_skips_row_groups(spark, tmp_path):
+    """On a flat (non-partitioned) time-sorted Parquet file the
+    predicate reaches the scan as PushedFilters and row-group
+    statistics skip most of the file for a narrow window."""
+    from datetime import timedelta
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0, n = datetime(2024, 1, 1), 40960
+    ts = [t0 + timedelta(minutes=5 * i) for i in range(n)]
+    table = pa.table({
+        "id": list(range(n)),
+        **{k: pa.array([getattr(t, k) for t in ts], pa.int32()) for k in _KEYS},
+    })
+    path = str(tmp_path / "flat.parquet")
+    pq.write_table(table, path, row_group_size=4096)
+
+    tp = TimePartitioner("hourly")
+    lo, hi = datetime(2024, 2, 10, 3), datetime(2024, 2, 10, 5)
+    df = spark.read.parquet(path).filter(tp.range_filter(lo, hi))
+    assert df.count() == 3 * 12
+    qe = df._jdf.queryExecution()
+    pushed = _scan_node(qe.executedPlan()).toString().split("PushedFilters: ")[1]
+    assert not pushed.startswith("[]") and "year" in pushed.splitlines()[0], pushed
+
+    df.collect()
+    read = _scan_node(qe.executedPlan()).metrics().apply("numOutputRows").value()
+    assert 0 < read <= 2 * 4096 < n, read
+
+
+def test_range_paths_aware_endpoints_bucket_in_target_zone():
+    """Aware endpoints truncate in the partitioner's zone: the range
+    runs from ``path_for(start)`` to ``path_for(end)``."""
+    from datetime import timezone
+
+    tp = TimePartitioner("daily", timezone="America/New_York")
+    start = datetime(2024, 3, 9, 0, tzinfo=timezone.utc)  # NY 03-08 19:00
+    end = datetime(2024, 3, 10, 12, tzinfo=timezone.utc)  # NY 03-10 08:00
+    assert tp.range_paths(start, end) == [
+        "year=2024/month=03/day=08",
+        "year=2024/month=03/day=09",
+        "year=2024/month=03/day=10",
+    ]

@@ -637,26 +637,30 @@ def glob_match(col: Column | str, patterns: str | list[str], *, dot: bool = Fals
     regex fast path keeps every other shape.
     """
     c = F.col(col) if isinstance(col, str) else col
-
-    def one(p: str) -> Column:
-        fast = _fast_predicate(c, p, dot, nocase)
-        if fast is not None:
-            return fast
-        if glob_regex_is_exact(p, dot):
-            return c.rlike(glob_to_regex(p, dot=dot, nocase=nocase))
-        return _exact_match_column(c, p, dot, nocase)
-
     pos, neg = split_patterns(patterns)
     if pos:
         cond = None
         for p in pos:
-            r = one(p)
+            r = _pattern_predicate(c, p, dot, nocase)
             cond = r if cond is None else (cond | r)
     else:
         cond = F.lit(neg != [])  # all-negative list: start from "all paths"
     for p in neg:
-        cond = cond & ~one(p)
+        cond = cond & ~_pattern_predicate(c, p, dot, nocase)
     return cond
+
+
+def _pattern_predicate(c: Column, pattern: str, dot: bool, nocase: bool) -> Column:
+    """One glob as a boolean Column: the startswith/endswith fast form
+    when it applies, else ``rlike`` on the compiled regex, else the
+    exact Arrow-batched matcher for the ``!()`` class no single regex
+    can express."""
+    fast = _fast_predicate(c, pattern, dot, nocase)
+    if fast is not None:
+        return fast
+    if glob_regex_is_exact(pattern, dot):
+        return c.rlike(glob_to_regex(pattern, dot=dot, nocase=nocase))
+    return _exact_match_column(c, pattern, dot, nocase)
 
 
 def _exact_match_column(c: Column, pattern: str, dot: bool, nocase: bool) -> Column:
@@ -696,15 +700,14 @@ def _exact_match_column(c: Column, pattern: str, dot: bool, nocase: bool) -> Col
 
 def glob_all(col: Column | str, patterns: list[str], *, dot: bool = False, nocase: bool = False) -> Column:
     """True iff EVERY pattern matches (reference PathMatcher.all,
-    src/index.ts:718-724). Inexpressible ``!()`` shapes route through
-    the exact Arrow-batched matcher, same as :func:`glob_match`."""
+    src/index.ts:718-724); each pattern compiles exactly as in
+    :func:`glob_match`. An empty list is vacuously true."""
+    if not patterns:
+        return F.lit(True)
     c = F.col(col) if isinstance(col, str) else col
-    cond = F.lit(True)
-    for p in patterns:
-        if glob_regex_is_exact(p, dot):
-            cond = cond & c.rlike(glob_to_regex(p, dot=dot, nocase=nocase))
-        else:
-            cond = cond & _exact_match_column(c, p, dot, nocase)
+    cond = _pattern_predicate(c, patterns[0], dot, nocase)
+    for p in patterns[1:]:
+        cond = cond & _pattern_predicate(c, p, dot, nocase)
     return cond
 
 

@@ -143,26 +143,23 @@ def jaccard_pairs(
     shingle_col: str = "shingles",
     threshold: float = 0.8,
     max_shingle_freq: int | None = None,
-    method: str = "prefix",
 ) -> DataFrame:
     """EXACT above-threshold Jaccard pairs, never a cartesian product.
 
     PRECONDITION: ``shingle_col`` holds SET-valued arrays (no duplicate
     elements), as produced by :func:`shingles`. Jaccard is a set
-    measure; on arrays with duplicates the two methods count
-    overlaps differently and neither is meaningful.
+    measure; on arrays with duplicates the prefix form and its
+    blocking twin count overlaps differently and neither is meaningful.
 
-    ``method='prefix'`` (default, the 100 TB plan): PPJoin-style prefix
-    filtering. Each doc's shingles are ordered by ascending global
-    frequency; if J(A,B) ≥ t then |A∩B| ≥ t·|A|, so A and B must share
-    an element within their first ``n - ceil(t·n) + 1`` shingles — the
-    candidate join touches ONLY those prefixes (rare shingles first, so
-    hot-shingle skew is excluded from the join by construction), then
-    candidates are exact-verified with array_intersect. Lossless.
-
-    ``method='blocking'``: plain explode/self-join on every shingle
-    with per-pair COUNT(*) — simpler plan, quadratic on hot shingles;
-    kept as the equivalence baseline (tests assert both agree).
+    Plan (the 100 TB plan): PPJoin-style prefix filtering. Each doc's
+    shingles are ordered by ascending global frequency; if J(A,B) ≥ t
+    then |A∩B| ≥ t·|A|, so A and B must share an element within their
+    first ``n - ceil(t·n) + 1`` shingles — the candidate join touches
+    ONLY those prefixes (rare shingles first, so hot-shingle skew is
+    excluded from the join by construction), then candidates are
+    exact-verified with array_intersect. Lossless; the plain
+    explode/self-join form :func:`_jaccard_pairs_blocking` is the
+    equivalence baseline tests compare against.
 
     ``max_shingle_freq`` drops shingles shared by more than N docs
     before pairing — the documented approximation for stop-shingles
@@ -170,15 +167,27 @@ def jaccard_pairs(
 
     Output: id_a, id_b, n_common, n_a, n_b, jaccard — ordered by caller.
     """
-    df = ensure_parallelism(df)
-    if method == "prefix":
-        return _jaccard_pairs_prefix(df, id_col, shingle_col, threshold, max_shingle_freq)
+    return _jaccard_pairs_prefix(
+        ensure_parallelism(df), id_col, shingle_col, threshold, max_shingle_freq
+    )
+
+
+def _jaccard_pairs_blocking(
+    df: DataFrame,
+    id_col: str,
+    shingle_col: str,
+    threshold: float,
+    max_shingle_freq: int | None,
+) -> DataFrame:
+    """Oracle-shaped twin of :func:`_jaccard_pairs_prefix`: plain
+    explode/self-join on every shingle with per-pair COUNT(*) — simpler
+    plan, quadratic on hot shingles."""
     # The exploded relation is read by the counts agg AND both join
     # sides.  Deliberately NOT persisted: the returned DataFrame is
     # lazy, so an in-function persist can never be paired with an
     # unpersist and would leak executor storage for the session
     # lifetime on every call.  Recomputing the explode is a cheap
-    # re-scan, acceptable for the non-default equivalence baseline.
+    # re-scan, acceptable for the equivalence baseline.
     sized = df.select(
         F.col(id_col).alias("_id"), F.col(shingle_col).alias("_sh")
     )
@@ -190,9 +199,9 @@ def jaccard_pairs(
             .select("_s")
         )
         ex = ex.join(F.broadcast(hot), "_s", "left_anti")
-    # set sizes AFTER the hot filter — the prefix method defines the
+    # set sizes AFTER the hot filter — the prefix form defines the
     # metric over the filtered sets, and computing n_a/n_b from the
-    # unfiltered arrays made the two methods return DIFFERENT pair sets
+    # unfiltered arrays made the two forms return DIFFERENT pair sets
     # whenever max_shingle_freq was set (equivalence-baseline violation)
     counts = ex.groupBy("_id").agg(F.count("*").alias("_n"))
     a = ex.select(F.col("_id").alias("id_a"), F.col("_s"))
@@ -731,7 +740,13 @@ def minhash_neardup_pairs(
     )
 
 
-def _cc_driver(spark, raw: DataFrame, id_type, max_iter: int) -> DataFrame:
+# Driver-solve ceiling for :func:`connected_components`, in undirected
+# edges: the symmetrized list holds 2× this many rows, Arrow-collected
+# as two int64 columns (16 B/row, ≤128 MiB at this value).
+_CC_DRIVER_EDGE_CAP = 4_000_000
+
+
+def _cc_driver(raw: DataFrame, id_type, max_iter: int) -> DataFrame:
     """Driver-side branch of :func:`connected_components`: the SAME
     pointer-jumped min-label fixpoint, vectorized over numpy arrays.
 
@@ -747,6 +762,7 @@ def _cc_driver(spark, raw: DataFrame, id_type, max_iter: int) -> DataFrame:
     import pandas as pd
     from pyspark.sql.types import StructField, StructType
 
+    spark = raw.sparkSession
     schema = StructType(
         [StructField("doc_id", id_type), StructField("cluster_id", id_type)]
     )
@@ -771,116 +787,27 @@ def _cc_driver(spark, raw: DataFrame, id_type, max_iter: int) -> DataFrame:
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
-    impl: str = "auto",
-    driver_edge_cap: int = 4_000_000,
+def _cc_distributed(
+    raw: DataFrame, id_type, max_iter: int, n_edges: int
 ) -> DataFrame:
-    """Duplicate-cluster resolution: assign every node appearing in the
-    pair list its component's minimum id as ``cluster_id``.
+    """Distributed branch of :func:`connected_components`: node/edge
+    data never leaves executors (the only driver-side value is a scalar
+    convergence aggregate).
 
-    Near-dup detection yields PAIRS; dedup policy needs CLUSTERS (keep
-    one representative per transitive group — A~B, B~C must retire two
-    of {A,B,C} even if A~C was never emitted). This is min-label
-    propagation: each round every node takes the smallest label among
-    itself and its neighbors, converging in O(component diameter)
-    rounds (bounded by ``max_iter``; raises if not converged so an
-    incomplete clustering can never be silently returned).
-
-    ``impl="auto"`` (default, round 10) dispatches on the MEASURED
-    edge count — the same probe the distributed loop already needs for
-    its topology sizing, so the dial costs nothing extra:
-
-    - ``"driver"`` when the symmetrized edge list holds at most
-      ``2 * driver_edge_cap`` rows: the pair graph of a dedup run is
-      corpus-TINY (only docs with a near-dup appear), while each
-      distributed round pays whole-cluster latency (a shuffle join +
-      an aggregation job); at sf10 the x17 pair graph is ~5×10⁵
-      directed edges (BASELINE.md: 512,792) yet the round loop alone
-      ran ~40 s. The driver solve Arrow-collects the (a, b) columns —
-      two int64 numpy arrays, 16 B/row, ≤128 MiB at the default cap
-      (string doc ids are bigger per row — the cap scales itself down
-      by the probed average id width, see below) — and runs the SAME
-      pointer-jumped
-      min-label iteration vectorized (``np.minimum.at`` + one
-      ``lab[lab]`` jump per round), so the fixpoint is identical by
-      construction (test-pinned against the distributed branch).
-    - ``"distributed"`` above the cap: node/edge data never leaves
-      executors (the only driver-side value is a scalar convergence
-      aggregate). A 100 TB near-dup graph with billions of edges takes
-      this path; the cap bounds driver memory the way the Σpop² probe
-      bounds the LSH verify join (vectorops._lsh_neardup_from_base).
-
-    Scale notes (distributed branch): per round = one shuffle join
-    (edges × labels) + one map-side-combinable min-aggregation. Rounds
-    are ``localCheckpoint``-ed: persist() alone keeps the logical
-    lineage, and each round's plan then embeds every prior round's
-    (analysis cost compounds until rounds take seconds); checkpointing
+    Per round = one shuffle join (edges × labels) + one
+    map-side-combinable min-aggregation. Rounds are
+    ``localCheckpoint``-ed: persist() alone keeps the logical lineage,
+    and each round's plan then embeds every prior round's (analysis
+    cost compounds until rounds take seconds); checkpointing
     physically truncates it. localCheckpoint stores blocks on
     executors — on a cluster where executor loss must not fail the
     job, swap in reliable ``checkpoint()`` with a checkpoint dir; the
     algorithm is unchanged.
     """
-    if impl not in ("auto", "driver", "distributed"):
-        raise ValueError(f"impl must be auto|driver|distributed, got {impl!r}")
-    # e is referenced TWICE below (forward + swapped); without a cache
-    # the union's branches EACH replay the whole upstream pair
-    # pipeline (banding join + verification — measured 2× the x29
-    # pairs cost at sf10, 106 s vs 45 s for the CC stage). The lazy
-    # checkpoint is materialized once by the union job and the swap
-    # side reads the cache.
-    # NULL ids are dropped up front so both impls see the same graph:
-    # the driver branch's np.unique cannot sort None among strings
-    # (opaque TypeError), and the distributed branch would silently
-    # treat NULL as a node that joins to nothing — neither is a useful
-    # semantics for bad input, and diverging across the auto dispatch
-    # boundary by graph size would be worse.
-    e = (
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .localCheckpoint(eager=False)
-    )
-    raw = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
+    spark = raw.sparkSession
     # size the round topology to the GRAPH, not the cluster: dedup
     # graphs are tiny relative to the corpus (only docs with a near-dup
     # appear), and per-round latency is dominated by task count
-    n_edges = raw.count()
-    spark = pairs.sparkSession
-    if impl == "auto":
-        cap = 2 * driver_edge_cap
-        id_dt = pairs.schema[id_a].dataType
-        if not isinstance(
-            id_dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-        ):
-            # byte-aware cap (advisor r10): the 16 B/row ≤128 MiB
-            # rationale assumes int64 ids. String/binary rows cost
-            # ~2·avg_len utf8 bytes + Arrow offset overhead, so scale
-            # the row cap down by the probed width ratio (one cheap
-            # agg over the already-checkpointed edge list, only on the
-            # non-integral-id path).
-            avg_w = (
-                raw.agg(
-                    F.avg(F.length(F.col("a").cast("string")))
-                ).collect()[0][0]
-                or 8.0
-            )
-            cap = max(1, int(cap * 16.0 / (2.0 * avg_w + 16.0)))
-        impl = "driver" if n_edges <= cap else "distributed"
-        import logging
-
-        logging.getLogger(__name__).info(
-            "connected_components auto: %d directed edges (cap %d) -> %s",
-            n_edges, cap, impl,
-        )
-    if impl == "driver":
-        return _cc_driver(spark, raw, pairs.schema[id_a].dataType, max_iter)
     parts = max(1, min(spark.sparkContext.defaultParallelism, n_edges // 50_000 + 1))
     edges = raw.repartition(parts, "a").localCheckpoint()
     # initial labels already fold in one propagation round: each node
@@ -899,7 +826,7 @@ def connected_components(
     # as the stop signal — one extra join per round over the labels
     # relation, which the round's edge join already dwarfs.
     numeric_ids = isinstance(
-        pairs.schema[id_a].dataType,
+        id_type,
         (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.DecimalType),
     )
     dec = F.sum(F.col("label").cast("decimal(38,0)"))
@@ -945,6 +872,94 @@ def connected_components(
                 F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
             )
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+
+
+def connected_components(
+    pairs: DataFrame,
+    id_a: str = "id_a",
+    id_b: str = "id_b",
+    max_iter: int = 25,
+) -> DataFrame:
+    """Duplicate-cluster resolution: assign every node appearing in the
+    pair list its component's minimum id as ``cluster_id``.
+
+    Near-dup detection yields PAIRS; dedup policy needs CLUSTERS (keep
+    one representative per transitive group — A~B, B~C must retire two
+    of {A,B,C} even if A~C was never emitted). This is min-label
+    propagation: each round every node takes the smallest label among
+    itself and its neighbors, converging in O(component diameter)
+    rounds (bounded by ``max_iter``; raises if not converged so an
+    incomplete clustering can never be silently returned).
+
+    The solve location is chosen from the MEASURED edge count — the
+    same probe the distributed loop needs for its topology sizing, so
+    the choice costs nothing extra:
+
+    - :func:`_cc_driver` when the symmetrized edge list holds at most
+      ``2 * _CC_DRIVER_EDGE_CAP`` rows: the pair graph of a dedup run is
+      corpus-TINY (only docs with a near-dup appear), while each
+      distributed round pays whole-cluster latency (a shuffle join +
+      an aggregation job); at sf10 the x17 pair graph is ~5×10⁵
+      directed edges (BASELINE.md: 512,792) yet the round loop alone
+      ran ~40 s. The driver solve Arrow-collects the (a, b) columns
+      (string doc ids are bigger per row — the cap scales itself down
+      by the probed average id width, see below) and runs the SAME
+      pointer-jumped min-label iteration vectorized
+      (``np.minimum.at`` + one ``lab[lab]`` jump per round), so the
+      fixpoint is identical by construction (test-pinned against the
+      distributed branch).
+    - :func:`_cc_distributed` above the cap. A 100 TB near-dup graph
+      with billions of edges takes this path; the cap bounds driver
+      memory the way the Σpop² probe bounds the LSH verify join
+      (vectorops._lsh_neardup_from_base).
+    """
+    # e is referenced TWICE below (forward + swapped); without a cache
+    # the union's branches EACH replay the whole upstream pair
+    # pipeline (banding join + verification — measured 2× the x29
+    # pairs cost at sf10, 106 s vs 45 s for the CC stage). The lazy
+    # checkpoint is materialized once by the union job and the swap
+    # side reads the cache.
+    # NULL ids are dropped up front so both branches see the same graph:
+    # the driver branch's np.unique cannot sort None among strings
+    # (opaque TypeError), and the distributed branch would silently
+    # treat NULL as a node that joins to nothing — neither is a useful
+    # semantics for bad input, and diverging across the edge-count
+    # dispatch boundary by graph size would be worse.
+    e = (
+        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+        .localCheckpoint(eager=False)
+    )
+    raw = (
+        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .distinct()
+        .localCheckpoint()
+    )
+    n_edges = raw.count()
+    id_dt = pairs.schema[id_a].dataType
+    cap = 2 * _CC_DRIVER_EDGE_CAP
+    if not isinstance(id_dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        # byte-aware cap (advisor r10): the 16 B/row ≤128 MiB
+        # rationale assumes int64 ids. String/binary rows cost
+        # ~2·avg_len utf8 bytes + Arrow offset overhead, so scale
+        # the row cap down by the probed width ratio (one cheap
+        # agg over the already-checkpointed edge list, only on the
+        # non-integral-id path).
+        avg_w = (
+            raw.agg(F.avg(F.length(F.col("a").cast("string")))).collect()[0][0]
+            or 8.0
+        )
+        cap = max(1, int(cap * 16.0 / (2.0 * avg_w + 16.0)))
+    import logging
+
+    on_driver = n_edges <= cap
+    logging.getLogger(__name__).info(
+        "connected_components: %d directed edges (cap %d) -> %s",
+        n_edges, cap, "driver" if on_driver else "distributed",
+    )
+    if on_driver:
+        return _cc_driver(raw, id_dt, max_iter)
+    return _cc_distributed(raw, id_dt, max_iter, n_edges)
 
 
 # ---------------------------------------------------------------------------

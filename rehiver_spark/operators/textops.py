@@ -193,7 +193,6 @@ def repetition_stats(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Gopher-style repetition quality signals per document:
 
@@ -204,34 +203,39 @@ def repetition_stats(
     High top-gram fractions flag boilerplate/spam (repeated nav text,
     keyword stuffing) — the standard pre-training repetition filters.
 
-    Plan: entirely MAP-SIDE — no explode, no shuffle, in BOTH impls.
-    The stats a doc needs are all within-row. The exploded formulation
-    would shuffle the full gram multiset on (doc, gram) — keys that
-    are nearly unique, so partial aggregation reduces nothing and
-    every token crosses the wire; at 100 TB that is the whole corpus
-    re-shuffled for a per-row answer. Documents with zero tokens
-    produce no output row (nothing to measure).
+    Plan: entirely MAP-SIDE — no explode, no shuffle, in the kernel
+    and its twin alike. The stats a doc needs are all within-row. The
+    exploded formulation would shuffle the full gram multiset on
+    (doc, gram) — keys that are nearly unique, so partial aggregation
+    reduces nothing and every token crosses the wire; at 100 TB that
+    is the whole corpus re-shuffled for a per-row answer. Documents
+    with zero tokens produce no output row (nothing to measure).
 
-    ``impl="arrow"`` (default, round 8 — the x25 playbook): text is
-    normalized JVM-side (``normalize_text`` — trim/``\\s+``-collapse/
-    lower stay on Java semantics: ASCII-only ``\\s``, 0x20-only trim,
-    UTF8String lowercasing; nothing Unicode-sensitive is re-implemented
-    in Python), then ONE mapInPandas pass splits on the single space
-    the normalization guarantees and computes all four stats via
-    factorize + np.unique — C-speed hash/sort kernels. The expression
-    form (kept as ``impl="expr"``, the oracle-shaped twin) pays Spark's
-    interpreted higher-order functions: the run-length ``aggregate``
-    fold, the ``zip_with`` bigram build and the per-element lambda
-    evaluation are NOT whole-stage-codegen'd — profiled as the
-    largest remaining sf10 outlier (12.8 s, 27× growth at 100× data,
-    BASELINE.md round 7). Bit-identical outputs (equal integer counts
-    → identical IEEE double quotients; equivalence test-pinned), so
-    the oracle twin certifies both.
+    Since round 8 (the x25 playbook) text is normalized JVM-side
+    (``normalize_text`` — trim/``\\s+``-collapse/lower stay on Java
+    semantics: ASCII-only ``\\s``, 0x20-only trim, UTF8String
+    lowercasing; nothing Unicode-sensitive is re-implemented in
+    Python), then ONE mapInPandas pass (:func:`_repetition_stats_arrow`)
+    splits on the single space the normalization guarantees and
+    computes all four stats via factorize + np.unique — C-speed
+    hash/sort kernels. The expression form (kept as
+    :func:`_repetition_stats_expr`, the oracle-shaped twin) pays
+    Spark's interpreted higher-order functions: the run-length
+    ``aggregate`` fold, the ``zip_with`` bigram build and the
+    per-element lambda evaluation are NOT whole-stage-codegen'd —
+    profiled as the largest remaining sf10 outlier (12.8 s, 27× growth
+    at 100× data, BASELINE.md round 7). Bit-identical outputs (equal
+    integer counts → identical IEEE double quotients; equivalence
+    test-pinned), so the oracle twin certifies both.
     """
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
-    if impl == "arrow":
-        return _repetition_stats_arrow(df, text_col, id_col)
+    return _repetition_stats_arrow(df, text_col, id_col)
+
+
+def _repetition_stats_expr(
+    df: DataFrame, text_col: str, id_col: str
+) -> DataFrame:
+    """Pure Column form of :func:`repetition_stats` — the
+    oracle-shaped twin of :func:`_repetition_stats_arrow`."""
 
     def max_multiplicity(arr: Column) -> Column:
         """Longest run in the sorted array == max element multiplicity."""
@@ -309,7 +313,7 @@ def _repetition_stats_arrow(
 
     ship_package(df.sparkSession)
     df = ensure_parallelism(df)
-    # same scan-level empty-doc gate as the expr form (see its inline
+    # same scan-level empty-doc gate as the expr twin (see its inline
     # note: rlike('\\S') on the RAW column stays a pushdown and is ⟺
     # tokens(text) non-empty, so every kernel row has ≥1 token)
     base = df.filter(
@@ -1789,7 +1793,6 @@ def dedup_substrings_pruned(
     text_col: str = "text",
     window_tokens: int = 20,
     min_run: int = 40,
-    impl: str = "arrow",
 ) -> DataFrame:
     """X57's cost knob for 100 TB: :func:`dedup_substrings` shuffles
     one row per corpus token TWICE. This variant guarantees the
@@ -1822,16 +1825,16 @@ def dedup_substrings_pruned(
     rule; docs outside the candidate set cannot claim "first
     occurrence", which is exactly the restriction stated above.
 
-    ``impl="arrow"`` (default since round 8) runs the per-window
-    argmin selection as one vectorized numpy kernel
-    (``sliding_window_view`` min/argmin, the x50/x51 Arrow-kernel
-    pattern); ``impl="expr"`` keeps it as pure Columns — zero Python,
-    whole plan JVM-side, the oracle-shaped twin. At sf0.1 the two are
-    within 10% of each other (2.76 expr vs 2.99 s arrow) once the
-    REAL bottleneck was fixed — a ``filter(size(_h) > 0)`` that
-    predicate pushdown folded into the hash projection, evaluating
-    the md5 window transform twice (an 8× cliff; see the inline
-    note). At sf10 the margin flips decisively: the w = 15
+    Since round 8 the per-window argmin selection runs as one
+    vectorized numpy kernel (:func:`_winnow_select_arrow` —
+    ``sliding_window_view`` min/argmin, the x50/x51 Arrow-kernel
+    pattern); :func:`_winnow_select_expr` keeps it as pure Columns —
+    zero Python, whole plan JVM-side, the oracle-shaped twin. At sf0.1
+    the two are within 10% of each other (2.76 expr vs 2.99 s arrow)
+    once the REAL bottleneck was fixed — a ``filter(size(_h) > 0)``
+    that predicate pushdown folded into the hash projection,
+    evaluating the md5 window transform twice (an 8× cliff; see the
+    inline note). At sf10 the margin flips decisively: the w = 15
     interpreted slice/min HOF costs 33.9 s for the candidate stage vs
     12.1 s arrow (round-8 measurement, identical candidate sets) —
     selection is O(n·w) in C vs 15 interpreted lambda evaluations per
@@ -1842,38 +1845,14 @@ def dedup_substrings_pruned(
     ``array_position``'s first occurrence; equivalence test-pinned),
     so the oracle twin certifies both.
     """
-    src, base, cand_docs, _fp_occ = _winnow_candidates(
-        df, id_col, text_col, window_tokens, min_run, impl
-    )
-    return _assemble_pruned(
-        src, base, cand_docs, id_col, text_col, window_tokens
-    )
-
-
-def _winnow_candidates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    window_tokens: int,
-    min_run: int,
-    impl: str,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Stage 1 of the pruned substring dedup — winnow fingerprint
-    selection and candidate-doc identification. Shared by
-    :func:`dedup_substrings_pruned` and :func:`dedup_substrings_auto`
-    (whose decision probe IS this stage, so choosing the pruned branch
-    wastes nothing). Returns (src, base, cand_docs, fp_occ); the
-    fingerprint occurrences and candidate set are persisted (2-3
-    consumers each — see the persist note inline). ``fp_occ`` is
-    returned so a caller that abandons this stage (the auto dial's
-    exact branch) can unpersist BOTH relations promptly instead of
-    leaving them to the track_persist high-water eviction."""
     from rehiver_spark.functions.hashing import md5_hash60
+    from rehiver_spark.session import track_persist
 
     L, R = window_tokens, min_run
     if R < L:
         raise ValueError(f"min_run ({R}) must be >= window_tokens ({L})")
     w = R - L + 1
+    # --- stage 1: winnow fingerprints → candidate docs ---
     src = ensure_parallelism(df)
     toks = tokens(F.col(text_col))
     base = src.select(F.col(id_col), toks.alias("_t"))
@@ -1891,83 +1870,14 @@ def _winnow_candidates(
         .otherwise(F.array().cast("array<bigint>"))
         .alias("_h"),
     )
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
     # NO ``filter(size(_h) > 0)`` here: predicate pushdown folds the
     # filter INTO the hash projection and the md5 transform evaluates
     # twice (once in the pushed condition, once in the output) —
     # measured 0.44 → 3.42 s at sf0.1, an 8× cliff. Empty docs are
-    # instead dropped inside each impl (the kernel skips them; the
-    # expr form's when-gate yields NULL, which explode drops) — the
-    # same gating discipline dedup_substrings uses for its explode.
-    if impl == "arrow":
-        from rehiver_spark.session import ship_package
-
-        ship_package(df.sparkSession)
-        # the id column keeps ITS OWN type end-to-end: the output
-        # schema echoes hashed's id field (string ids are as valid as
-        # longs — the exact path and the expr impl both handle them),
-        # and inside the kernel ids stay in the input Series' dtype
-        # rather than being forced through np.int64
-        id_dt = hashed.schema[id_col].dataType.simpleString()
-
-        def _select(batches):
-            import numpy as np
-            import pandas as pd
-            from numpy.lib.stride_tricks import sliding_window_view
-
-            for pdf in batches:
-                ids, poss, fps = [], [], []
-                for did, h in zip(pdf[id_col], pdf["_h"]):
-                    a = np.asarray(h, dtype=np.int64)
-                    if len(a) == 0:
-                        continue
-                    if len(a) >= w:
-                        win = sliding_window_view(a, w)
-                        # first-minimum argmin == array_position's
-                        # first occurrence == the expr tie-break
-                        pos = np.unique(np.arange(len(win)) + win.argmin(axis=1)) + 1
-                    else:
-                        pos = np.array([a.argmin() + 1])
-                    ids.extend([did] * len(pos))
-                    poss.extend(pos.tolist())
-                    fps.extend(a[pos - 1].tolist())
-                # explicit dtypes: an empty batch would otherwise
-                # yield object columns Arrow cannot cast (ids inherit
-                # the input column's dtype, int or object alike)
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(ids, dtype=pdf[id_col].dtype),
-                        "pos": np.asarray(poss, dtype=np.int32),
-                        "fp": np.asarray(fps, dtype=np.int64),
-                    }
-                )
-
-        fp_occ = hashed.mapInPandas(
-            _select, f"{id_col} {id_dt}, pos int, fp long"
-        )
-    else:
-        n_sel = F.greatest(F.size(F.col("_h")) - w + 1, F.lit(1))
-        mins = F.transform(
-            F.sequence(F.lit(1), n_sel),
-            lambda i: F.struct(
-                (
-                    i
-                    + F.array_position(
-                        F.slice(F.col("_h"), i, w),
-                        F.array_min(F.slice(F.col("_h"), i, w)),
-                    )
-                    - 1
-                ).alias("pos"),
-                F.array_min(F.slice(F.col("_h"), i, w)).alias("fp"),
-            ),
-        )
-        sel = F.when(F.size(F.col("_h")) > 0, F.array_distinct(mins))
-        fp_occ = (
-            hashed.select(id_col, F.explode(sel).alias("_f")).select(
-                id_col, F.col("_f.pos").alias("pos"), F.col("_f.fp").alias("fp")
-            )
-        )
+    # instead dropped inside the selection (the kernel skips them; the
+    # twin's when-gate yields NULL, which explode drops) — the same
+    # gating discipline dedup_substrings uses for its explode.
+    #
     # a fingerprint hash selected at >= 2 distinct (doc, pos) sites —
     # across docs OR twice within one doc — marks every holder doc a
     # candidate; the count shuffles only fingerprint rows. fp_occ and
@@ -1975,9 +1885,7 @@ def _winnow_candidates(
     # and |candidate docs| rows): each is read by 2-3 consumers below,
     # and without the persist every consumer re-derives the whole
     # hash+select pass — measured 5.6 → 2.9 s at sf0.1
-    from rehiver_spark.session import track_persist
-
-    fp_occ = track_persist(fp_occ)
+    fp_occ = track_persist(_winnow_select_arrow(hashed, id_col, w))
     dup_fp = (
         fp_occ.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("_c"))
@@ -1987,20 +1895,8 @@ def _winnow_candidates(
     cand_docs = track_persist(
         fp_occ.join(dup_fp, "fp", "left_semi").select(id_col).distinct()
     )
-    return src, base, cand_docs, fp_occ
-
-
-def _assemble_pruned(
-    src: DataFrame,
-    base: DataFrame,
-    cand_docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    L: int,
-) -> DataFrame:
-    """Stage 2 of the pruned substring dedup: the exact stride-1
-    pipeline over candidate docs only, normalized-token passthrough
-    for everyone else."""
+    # --- stage 2: the exact stride-1 pipeline over candidate docs
+    # only, normalized-token passthrough for everyone else ---
     deduped = dedup_substrings(
         src.join(cand_docs, id_col, "left_semi"), id_col, text_col, L
     )
@@ -2020,71 +1916,75 @@ def _assemble_pruned(
     return deduped.unionByName(passthru)
 
 
-def dedup_substrings_auto(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window_tokens: int = 20,
-    min_run: int = 40,
-    density_cutoff: float | None = None,
-    impl: str = "arrow",
-) -> DataFrame:
-    """Dial between :func:`dedup_substrings` (exact) and
-    :func:`dedup_substrings_pruned` (r6 verdict task 3).
+def _winnow_select_arrow(hashed: DataFrame, id_col: str, w: int) -> DataFrame:
+    """Winnow selection of :func:`dedup_substrings_pruned` as one
+    mapInPandas pass: ``hashed`` = (id, _h array<bigint>) → one
+    (id, pos, fp) row per distinct selected position (the minimum of
+    each sliding window of ``w`` hashes, first minimum on ties)."""
+    from rehiver_spark.session import ship_package
 
-    ``density_cutoff=None`` (the default since r12) short-circuits to
-    the EXACT branch with NO probe. The r6-era operating curve
-    ("pruned wins at 9% candidate density") was re-measured on the
-    r12 tree and the pruned branch is now DOMINATED at every operating
-    point — real fixture sf0.1 8.6% density: exact 2.34 s vs pruned
-    4.01 s; real sf10 31%: 13.64 vs 18.63; synthetic short-doc 500k
-    corpus at 1/5/15% planted density: 7.3 vs 8.5-10.7; synthetic
-    long-doc (400-token) corpus at 1/8%: 20.8 vs 24.5-25.7 (receipts
-    in BASELINE.md §Round 12). The r11 winnow zip_with/least cascade
-    sped the fingerprint SELECTION, but the pruned pipeline still pays
-    the full winnow pass (~2/3 of the exact pass's total cost at sf10)
-    before restricting anything — the restriction never earns it back.
-    Choose :func:`dedup_substrings_pruned` explicitly when you want
-    its RELAXED contract (only runs ≥ ``min_run`` removed), not for
-    speed.
+    ship_package(hashed.sparkSession)
+    # the id column keeps ITS OWN type end-to-end: the output schema
+    # echoes hashed's id field (string ids are as valid as longs — the
+    # exact path and the twin both handle them), and inside the kernel
+    # ids stay in the input Series' dtype rather than being forced
+    # through np.int64
+    id_dt = hashed.schema[id_col].dataType.simpleString()
 
-    A numeric ``density_cutoff`` keeps the legacy measured dial:
-    candidate density is computed from the pruned form's own stage 1
-    (winnow fingerprints → docs holding a ≥2-site fingerprint), fully
-    reused when the decision is "pruned"; the decision is logged
-    (``rehiver_spark.operators.textops`` logger, INFO) and the legacy
-    path stays EAGER (two count() jobs before the lazy plan returns).
-    Semantics follow the chosen branch; forced-branch equivalence is
-    property-tested in tests/test_property.py.
-    """
-    import logging
+    def _select(batches):
+        import numpy as np
+        import pandas as pd
+        from numpy.lib.stride_tricks import sliding_window_view
 
-    if density_cutoff is None:
-        logging.getLogger(__name__).info(
-            "dedup_substrings_auto: exact branch (r12 default — pruned "
-            "measured dominated at every operating point, no probe run)"
-        )
-        return dedup_substrings(df, id_col, text_col, window_tokens)
-    src, base, cand_docs, fp_occ = _winnow_candidates(
-        df, id_col, text_col, window_tokens, min_run, impl
+        for pdf in batches:
+            ids, poss, fps = [], [], []
+            for did, h in zip(pdf[id_col], pdf["_h"]):
+                a = np.asarray(h, dtype=np.int64)
+                if len(a) == 0:
+                    continue
+                if len(a) >= w:
+                    win = sliding_window_view(a, w)
+                    # first-minimum argmin == array_position's
+                    # first occurrence == the expr tie-break
+                    pos = np.unique(np.arange(len(win)) + win.argmin(axis=1)) + 1
+                else:
+                    pos = np.array([a.argmin() + 1])
+                ids.extend([did] * len(pos))
+                poss.extend(pos.tolist())
+                fps.extend(a[pos - 1].tolist())
+            # explicit dtypes: an empty batch would otherwise
+            # yield object columns Arrow cannot cast (ids inherit
+            # the input column's dtype, int or object alike)
+            yield pd.DataFrame(
+                {
+                    id_col: pd.Series(ids, dtype=pdf[id_col].dtype),
+                    "pos": np.asarray(poss, dtype=np.int32),
+                    "fp": np.asarray(fps, dtype=np.int64),
+                }
+            )
+
+    return hashed.mapInPandas(_select, f"{id_col} {id_dt}, pos int, fp long")
+
+
+def _winnow_select_expr(hashed: DataFrame, id_col: str, w: int) -> DataFrame:
+    """Oracle-shaped twin of :func:`_winnow_select_arrow`: the same
+    selection as pure Column expressions (zero Python)."""
+    n_sel = F.greatest(F.size(F.col("_h")) - w + 1, F.lit(1))
+    mins = F.transform(
+        F.sequence(F.lit(1), n_sel),
+        lambda i: F.struct(
+            (
+                i
+                + F.array_position(
+                    F.slice(F.col("_h"), i, w),
+                    F.array_min(F.slice(F.col("_h"), i, w)),
+                )
+                - 1
+            ).alias("pos"),
+            F.array_min(F.slice(F.col("_h"), i, w)).alias("fp"),
+        ),
     )
-    n_docs = src.count()
-    n_cand = cand_docs.count() if n_docs else 0
-    density = (n_cand / n_docs) if n_docs else 0.0
-    chosen = "exact" if density > density_cutoff else "pruned"
-    logging.getLogger(__name__).info(
-        "dedup_substrings_auto: %d/%d candidate docs (density %.3f, "
-        "cutoff %.3f) -> %s branch",
-        n_cand, n_docs, density, density_cutoff, chosen,
-    )
-    if chosen == "exact":
-        # stage-1 relations are probe-only on this branch — release
-        # their cached partitions now (the pruned branch instead reuses
-        # both in the result plan, where unpersisting early would void
-        # the persist)
-        fp_occ.unpersist()
-        cand_docs.unpersist()
-        return dedup_substrings(src, id_col, text_col, window_tokens)
-    return _assemble_pruned(
-        src, base, cand_docs, id_col, text_col, window_tokens
+    sel = F.when(F.size(F.col("_h")) > 0, F.array_distinct(mins))
+    return hashed.select(id_col, F.explode(sel).alias("_f")).select(
+        id_col, F.col("_f.pos").alias("pos"), F.col("_f.fp").alias("fp")
     )

@@ -316,25 +316,21 @@ def _plane_buckets_udf(planes, input_dtype: str):
 
 
 def _lsh_verify_arrow(
-    bucketed: DataFrame,
-    threshold: float,
-    id_type,
-    split_cap: int | None = None,
-    coalesce_groups: int | None = None,
-    hist: DataFrame | None = None,
+    bucketed: DataFrame, threshold: float, id_type, hist: DataFrame
 ) -> DataFrame:
     """Within-bucket exact-cosine verification as ONE ``applyInPandas``
     pass — the round-9 scale fix for the LSH near-dup family (same
     shape as semdedup's prior-max kernel), re-grouped in round 10 for
     the adaptive-plane posture:
 
-    - SMALL buckets coalesce into ≤ ``coalesce_groups`` hash groups
-      per table and the kernel loops buckets inside each group —
+    - SMALL buckets coalesce into ≤ ``_LSH_VERIFY_COALESCE_GROUPS``
+      hash groups per table and the kernel loops buckets inside each
+      group —
       constant-population bucketing means ~N/64 buckets, and per-group
       applyInPandas overhead (~0.6 ms measured r9) would otherwise
       dominate;
-    - a bucket whose population exceeds ``split_cap`` is SPLIT into
-      block-pair subtasks: rows get a deterministic block id
+    - a bucket whose population exceeds ``_LSH_BUCKET_SPLIT_CAP`` is
+      SPLIT into block-pair subtasks: rows get a deterministic block id
       (xxhash64(_id) mod ceil(pop/cap)) and are replicated once per
       block, keyed (bi, bj) = (min, max) of (own block, partner
       block); subtask (i, i) verifies within-block pairs, (i, j)
@@ -343,7 +339,9 @@ def _lsh_verify_arrow(
       the bucket is (the r9 verdict's x9 `weak`: one task owning a
       pop² cosine block grows quadratically with corpus size).
 
-    ``bucketed`` = (t, bkt, _id, _v). The relational verify
+    ``bucketed`` = (t, bkt, _id, _v); ``hist`` = (t, bkt, _pop), the
+    bucket histogram the caller's Σpop² probe already aggregated. The
+    relational verify
     materialized pop² candidate rows × two dim-sized vectors through a
     join; this kernel ships each bucket's vectors ONCE (Σpop × dim
     doubles per table, × ceil(pop/cap) for the few split buckets —
@@ -386,8 +384,6 @@ def _lsh_verify_arrow(
         StructType,
     )
 
-    cap = int(split_cap or _LSH_BUCKET_SPLIT_CAP)
-    ngroups = int(coalesce_groups or _LSH_VERIFY_COALESCE_GROUPS)
     out_schema = StructType(
         [
             StructField("id_a", id_type, True),
@@ -397,14 +393,9 @@ def _lsh_verify_arrow(
     )
 
     # --- grouping prep: coalesce cold buckets, split hot ones ---
-    # the auto dispatch already aggregated the bucket histogram for
-    # its Σpop² dial and passes it in persisted; recompute only when
-    # the kernel is forced directly (impl="arrow")
-    if hist is None:
-        hist = bucketed.groupBy("t", "bkt").agg(F.count(F.lit(1)).alias("_pop"))
-    hot = hist.filter(F.col("_pop") > cap)
+    hot = hist.filter(F.col("_pop") > _LSH_BUCKET_SPLIT_CAP)
     tagged = bucketed.join(F.broadcast(hot), ["t", "bkt"], "left")
-    g = F.pmod(F.xxhash64("bkt"), F.lit(ngroups)).cast("int")
+    g = F.pmod(F.xxhash64("bkt"), F.lit(_LSH_VERIFY_COALESCE_GROUPS)).cast("int")
     cold = tagged.filter(F.col("_pop").isNull()).select(
         "t",
         g.alias("_g"),
@@ -415,7 +406,7 @@ def _lsh_verify_arrow(
         "_id",
         "_v",
     )
-    nb = F.ceil(F.col("_pop") / F.lit(cap)).cast("int")
+    nb = F.ceil(F.col("_pop") / F.lit(_LSH_BUCKET_SPLIT_CAP)).cast("int")
     hot_rows = (
         tagged.filter(F.col("_pop").isNotNull())
         .withColumn("_blk", F.pmod(F.xxhash64("_id"), nb).cast("int"))
@@ -614,15 +605,13 @@ def lsh_cosine_neardup_portable(
     n_tables: int = 4,
     seed: int = 42,
     scale: int = 10000,
-    impl: str = "auto",
 ) -> DataFrame:
     """``lsh_cosine_neardup`` with quantized Rademacher bucketing — the
     oracle-checkable form. Candidates = per-table bucket collisions;
     verification = exact cosine, dispatched by the measured Σpop²
-    probe since round 9 (``impl="auto"`` — see
-    :func:`_lsh_neardup_from_base`; ``"expr"`` is the oracle-shaped
-    relational join, ``"arrow"`` the within-bucket kernel, bit-equal
-    and test-pinned). All tables' buckets are computed in ONE
+    probe since round 9 (see :func:`_lsh_neardup_from_base`: the
+    oracle-shaped relational join or the within-bucket kernel,
+    bit-equal and test-pinned). All tables' buckets are computed in ONE
     projection.
 
     ``n_planes=None`` (the default since round 10) picks
@@ -660,7 +649,7 @@ def lsh_cosine_neardup_portable(
         n_planes = adaptive_plane_count(base.count())
     planes = [rademacher_planes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
     bkts = _plane_buckets_udf(planes, input_dtype="int64")
-    return _lsh_neardup_from_base(base, bkts("_q"), threshold, impl, dim)
+    return _lsh_neardup_from_base(base, bkts("_q"), threshold, dim)
 
 
 # expr verify materializes ~ Σpop² candidate rows × two dim-sized
@@ -673,57 +662,60 @@ _LSH_EXPR_VERIFY_MAX_BYTES = 1 << 30
 
 
 def _lsh_neardup_from_base(
-    base: DataFrame, bkts_col: Column, threshold: float, impl: str, dim: int
+    base: DataFrame, bkts_col: Column, threshold: float, dim: int
 ) -> DataFrame:
     """Shared candidate/verify tail of both LSH near-dup forms.
     ``base`` = (_id, _v, ...), ``bkts_col`` = array<bigint> of one
     packed bucket per table.
 
-    ``impl="auto"`` (the operator default) dispatches on a measured
-    Σpop² probe: one scalar aggregation over the bucket histogram (the
-    ONE eager job this operator runs — base is persisted, so the probe
-    costs the bucket UDF once plus a tiny shuffle) estimates the expr
-    verify's join bytes (Σpop² × 2·dim doubles) and picks the
-    relational join below ``_LSH_EXPR_VERIFY_MAX_BYTES``, the
-    within-bucket kernel above it. Deterministic given the data; both
-    branches are bit-equal (test-pinned), so the dial is a cost
-    decision, not a semantics change."""
-    if impl not in ("auto", "arrow", "expr"):
-        raise ValueError(f"impl must be auto|arrow|expr, got {impl!r}")
-    hist = None
-    if impl == "auto":
-        # ONE histogram aggregation feeds both the Σpop² dial and (if
-        # the kernel wins) the verify stage's hot-bucket detection —
-        # before round 10 each was its own shuffle over the exploded
-        # bucket relation
-        hist = track_persist(
-            base.select(F.posexplode(bkts_col))
-            .withColumnsRenamed({"pos": "t", "col": "bkt"})
-            .groupBy("t", "bkt")
-            .agg(F.count(F.lit(1)).alias("_pop"))
-        )
-        sum_pop2 = (
-            hist.agg(F.sum(F.col("_pop") * F.col("_pop")).alias("_s")).first()["_s"]
-        ) or 0
-        est_bytes = sum_pop2 * (2 * dim * 8 + 48)
-        impl = "expr" if est_bytes <= _LSH_EXPR_VERIFY_MAX_BYTES else "arrow"
-        if impl == "expr":
-            # the histogram's only other consumer is the arrow kernel's
-            # hot-bucket detection; on the expr path it is dead after
-            # the Σpop² read, so free its executor storage now instead
-            # of waiting for high-water eviction / release_persisted
-            hist.unpersist()
-            hist = None
-    if impl == "arrow":
-        bucketed = base.select(
-            "_id", "_v", F.posexplode(bkts_col)
-        ).withColumnsRenamed({"pos": "t", "col": "bkt"})
-        pairs = _lsh_verify_arrow(
-            bucketed, threshold, base.schema["_id"].dataType, hist=hist
-        )
-        # a pair colliding in several tables is verified in each with
-        # an identical fold → identical doubles → distinct collapses
-        return pairs.distinct()
+    Verification dispatches on a measured Σpop² probe: one scalar
+    aggregation over the bucket histogram (the ONE eager job this
+    operator runs — base is persisted, so the probe costs the bucket
+    UDF once plus a tiny shuffle) estimates the relational verify's
+    join bytes (Σpop² × 2·dim doubles) and picks
+    :func:`_lsh_verify_expr` at or below ``_LSH_EXPR_VERIFY_MAX_BYTES``,
+    the within-bucket kernel :func:`_lsh_verify_arrow` above it.
+    Deterministic given the data; both branches are bit-equal
+    (test-pinned), so the dispatch is a cost decision, not a semantics
+    change."""
+    # ONE histogram aggregation feeds both the Σpop² probe and (if the
+    # kernel wins) the verify stage's hot-bucket detection — before
+    # round 10 each was its own shuffle over the exploded bucket
+    # relation
+    hist = track_persist(
+        base.select(F.posexplode(bkts_col))
+        .withColumnsRenamed({"pos": "t", "col": "bkt"})
+        .groupBy("t", "bkt")
+        .agg(F.count(F.lit(1)).alias("_pop"))
+    )
+    sum_pop2 = (
+        hist.agg(F.sum(F.col("_pop") * F.col("_pop")).alias("_s")).first()["_s"]
+    ) or 0
+    if sum_pop2 * (2 * dim * 8 + 48) <= _LSH_EXPR_VERIFY_MAX_BYTES:
+        # the histogram's only other consumer is the kernel's hot-bucket
+        # detection; on the relational path it is dead after the Σpop²
+        # read, so free its executor storage now instead of waiting for
+        # high-water eviction / release_persisted
+        hist.unpersist()
+        return _lsh_verify_expr(base, bkts_col, threshold)
+    bucketed = base.select(
+        "_id", "_v", F.posexplode(bkts_col)
+    ).withColumnsRenamed({"pos": "t", "col": "bkt"})
+    pairs = _lsh_verify_arrow(
+        bucketed, threshold, base.schema["_id"].dataType, hist
+    )
+    # a pair colliding in several tables is verified in each with an
+    # identical fold → identical doubles → distinct collapses
+    return pairs.distinct()
+
+
+def _lsh_verify_expr(
+    base: DataFrame, bkts_col: Column, threshold: float
+) -> DataFrame:
+    """Relational verify of :func:`_lsh_neardup_from_base`, the
+    oracle-shaped twin of :func:`_lsh_verify_arrow`: per-table bucket
+    self-join → distinct candidate pairs → exact cosine as the
+    ``aggregate(zip_with)`` left-to-right fold."""
     bucketed = base.select("_id", F.posexplode(bkts_col)).withColumnsRenamed(
         {"pos": "t", "col": "bkt"}
     )
@@ -762,19 +754,18 @@ def lsh_cosine_neardup(
     n_planes: int | None = None,
     n_tables: int = 4,
     seed: int = 42,
-    impl: str = "auto",
 ) -> DataFrame:
     """ANN near-dup: per-table sign-LSH bucket collisions → exact
     cosine verification → distinct survivors. Approximate (recall < 1
     possible); returned pairs ⊆ exact answer. All tables' buckets come
     from ONE projection; verification dispatches on the measured
-    Σpop² probe since round 9 (``impl="auto"``, see
-    :func:`_lsh_neardup_from_base`): small bucket histograms keep the
-    relational join (``"expr"``), while skewed ones take the
-    within-bucket Arrow kernel (``"arrow"``,
-    :func:`_lsh_verify_arrow`) — the join materialized pop² candidate
-    rows × two dim-sized vectors, which ran the executor out of
-    allocation headroom at sf10 where Σpop² ≈ 2.3e8 per table.
+    Σpop² probe since round 9 (see :func:`_lsh_neardup_from_base`):
+    small bucket histograms keep the relational join
+    (:func:`_lsh_verify_expr`), while skewed ones take the
+    within-bucket Arrow kernel (:func:`_lsh_verify_arrow`) — the join
+    materialized pop² candidate rows × two dim-sized vectors, which ran
+    the executor out of allocation headroom at sf10 where Σpop² ≈
+    2.3e8 per table.
 
     ``n_planes=None`` (default since round 10) = adaptive: the plane
     count comes from a count probe via :func:`adaptive_plane_count`,
@@ -794,7 +785,7 @@ def lsh_cosine_neardup(
         n_planes = adaptive_plane_count(base.count())
     planes = [_hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
     bkts = _plane_buckets_udf(planes, input_dtype="float64")
-    return _lsh_neardup_from_base(base, bkts("_v"), threshold, impl, dim)
+    return _lsh_neardup_from_base(base, bkts("_v"), threshold, dim)
 
 
 def kmeans_sample_centroids(
@@ -936,8 +927,8 @@ def _assign_cells_arrow(normed: DataFrame, cents: DataFrame) -> DataFrame:
     """Map-only nearest-centroid assignment for :func:`semdedup`
     (round 8): the centroid table is collected to the driver (bounded
     by the [16, 65536] k clamp × dim doubles — ≤ 32 MB at the clamp
-    with dim 64, the kmeans `_arrow_assign` pattern) and embedded in
-    ONE vectorized kernel, so the corpus crosses Arrow once (vector in,
+    with dim 64, the :func:`_kmeans_assign_arrow` pattern) and embedded
+    in ONE vectorized kernel, so the corpus crosses Arrow once (vector in,
     cell id out) instead of materializing N×k joined rows — each
     carrying BOTH vectors — through an interpreted fold and a
     row_number shuffle. At the k clamp the per-row cost is k·d
@@ -1244,7 +1235,6 @@ def semdedup(
     max_cell_rows: int | str | None = "auto",
     max_split_rounds: int = 4,
     centroids: DataFrame | None = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embeddings, then within each cluster
@@ -1258,10 +1248,10 @@ def semdedup(
     SQL. At scale the centroids would come from k-means on a sample;
     only the seeding changes, not the plan.
 
-    Plan shape (the SemDeDup scaling argument), ``impl="arrow"``
-    default since round 8 — both corpus-scale stages are vectorized
-    kernels, with the relational forms kept as the oracle-shaped
-    ``"expr"`` twin (bit-equality test-pinned):
+    Plan shape (the SemDeDup scaling argument, since round 8) — both
+    corpus-scale stages are vectorized kernels, with the relational
+    forms :func:`_assign_to_cells` and :func:`_prior_max_expr` kept as
+    the oracle-shaped twins (bit-equality test-pinned):
 
     - centroid assignment is MAP-ONLY (:func:`_assign_cells_arrow`):
       the clamp-bounded centroid table is collected and embedded in
@@ -1278,9 +1268,9 @@ def semdedup(
 
     At the k clamp (k = 65536, N ≥ ~4.3e9) per-row assignment is k·d
     multiply-adds — 4.2M flops/row at d=64, a vectorized-C cost that
-    scales linearly with N across executors; the expr form at that
-    point would materialize 65536 rows per input row, which is why
-    the arrow path is the default. If even k·d/row is too hot, fit
+    scales linearly with N across executors; the relational form at
+    that point would materialize 65536 rows per input row, which is
+    why the kernels are the plan. If even k·d/row is too hot, fit
     external ``centroids`` hierarchically (coarse ~√k cells → probe —
     the :func:`ivf_topk` machinery) and pass them in; the dial is the
     ``centroids`` parameter, not a semantics change.
@@ -1324,13 +1314,8 @@ def semdedup(
         .limit(n_cells)
         .select(F.col(id_col).alias("cell_id"), l2_normalize(vec_col).alias("_centv"))
     )
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
     normed = emb.select(F.col(id_col).alias("_id"), l2_normalize(vec_col).alias("_v"))
-    if impl == "arrow":
-        assigned = _assign_cells_arrow(normed, cents)
-    else:
-        assigned = _assign_to_cells(normed, cents)
+    assigned = _assign_cells_arrow(normed, cents)
     # the assignment feeds BOTH the prior-max stage and the final join,
     # so without a cache the corpus-scale kernel runs twice; one lazy
     # localCheckpoint (materialized by whichever action comes first,
@@ -1343,11 +1328,7 @@ def semdedup(
         assigned = _split_hot_cells(assigned, int(max_cell_rows), max_split_rounds)
     else:
         assigned = assigned.localCheckpoint(eager=False)
-    prior = (
-        _prior_max_arrow(assigned)
-        if impl == "arrow"
-        else _prior_max_expr(assigned)
-    )
+    prior = _prior_max_arrow(assigned)
     out = assigned.join(prior, "_id", "left").select(
         F.col("_id").alias(id_col),
         F.col("cell_id").cast("bigint").alias("cell_id"),
@@ -1673,7 +1654,6 @@ def jl_project(
     out_col: str = "proj",
     seed: int = 42,
     scale: int = 10000,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Johnson–Lindenstrauss random projection (X50): reduce ``dim``-d
     embeddings to ``out_dim`` dims with deterministic Rademacher ±1
@@ -1689,63 +1669,71 @@ def jl_project(
     one division by the literal scale·sqrt(out_dim) — so the oracle
     reproduces every projected coordinate bit-for-bit.
 
-    ``impl="arrow"`` (default) runs the whole projection as ONE
-    Arrow-batched int64 matmul — higher-order-function expressions
+    The whole projection runs as ONE Arrow-batched int64 matmul
+    (:func:`_jl_coords_arrow`) — higher-order-function expressions
     never enter codegen, and out_dim·dim interpreted multiply-adds per
     row cost ~10× the batched matmul (measured 2.37 → 0.26 s at
-    sf0.1). ``impl="expr"`` keeps the pure Column-expression form
-    (no Python workers anywhere); both produce bit-identical output
+    sf0.1). :func:`_jl_coords_expr` keeps the pure Column-expression
+    form as the oracle-shaped twin; both produce bit-identical output
     (int64 dots are exact in either engine; equivalence test-pinned).
     """
     planes = rademacher_planes(dim, out_dim, seed)
-    div = float(scale) * math.sqrt(out_dim)
-    if impl == "arrow":
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
+    return df.withColumn(
+        out_col, _jl_coords_arrow(as_double(vec_col), planes, dim, scale)
+    )
 
-        P = np.ascontiguousarray(np.asarray(planes, dtype=np.int64).T)
 
-        def _proj(s):
-            if len(s) == 0:
-                return pd.Series([], dtype=object)
-            vals = s.to_numpy()
-            # NULL / wrong-dim / element-null embeddings project to
-            # NULL (np.vstack over None crashes the stage; a NaN
-            # element — how Arrow delivers a null ELEMENT — survives
-            # vstack but turns np.rint(...).astype(int64) into
-            # INT64_MIN garbage); expr impl matches
-            valid = np.array(
-                [
-                    v is not None
-                    and len(v) == P.shape[0]
-                    and not np.isnan(np.asarray(v, dtype=np.float64)).any()
-                    for v in vals
-                ]
-            )
-            out = np.empty(len(vals), dtype=object)
-            out[~valid] = None
-            if valid.any():
-                x = np.vstack(vals[valid]).astype(np.float64)
-                q = np.rint(x * scale).astype(np.int64)
-                dots = q @ P
-                # np.round is half-to-even vs Spark's HALF_UP: a
-                # mismatch needs an exact .5 at the 6th decimal,
-                # impossible when div is irrational and measure-zero
-                # otherwise (pinned by the expr/arrow equivalence test)
-                proj = np.round(dots / div, 6)
-                # object-array boolean assignment rejects a 2-D rhs;
-                # place each row individually
-                for idx, row in zip(np.flatnonzero(valid), proj):
-                    out[idx] = row
-            return pd.Series(out)
+def _jl_coords_arrow(v: Column, planes, dim: int, scale: int) -> Column:
+    """Projected array of :func:`jl_project` as one pandas UDF."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
 
-        _proj.__annotations__ = {"s": pd.Series, "return": pd.Series}
-        udf = pandas_udf(_proj, "array<double>")
-        return df.withColumn(out_col, udf(as_double(vec_col)))
-    if impl != "expr":
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
-    v = as_double(vec_col)
+    div = float(scale) * math.sqrt(len(planes))
+    P = np.ascontiguousarray(np.asarray(planes, dtype=np.int64).T)
+
+    def _proj(s):
+        if len(s) == 0:
+            return pd.Series([], dtype=object)
+        vals = s.to_numpy()
+        # NULL / wrong-dim / element-null embeddings project to
+        # NULL (np.vstack over None crashes the stage; a NaN
+        # element — how Arrow delivers a null ELEMENT — survives
+        # vstack but turns np.rint(...).astype(int64) into
+        # INT64_MIN garbage); the expr twin matches
+        valid = np.array(
+            [
+                v is not None
+                and len(v) == dim
+                and not np.isnan(np.asarray(v, dtype=np.float64)).any()
+                for v in vals
+            ]
+        )
+        out = np.empty(len(vals), dtype=object)
+        out[~valid] = None
+        if valid.any():
+            x = np.vstack(vals[valid]).astype(np.float64)
+            q = np.rint(x * scale).astype(np.int64)
+            dots = q @ P
+            # np.round is half-to-even vs Spark's HALF_UP: a
+            # mismatch needs an exact .5 at the 6th decimal,
+            # impossible when div is irrational and measure-zero
+            # otherwise (pinned by the expr/arrow equivalence test)
+            proj = np.round(dots / div, 6)
+            # object-array boolean assignment rejects a 2-D rhs;
+            # place each row individually
+            for idx, row in zip(np.flatnonzero(valid), proj):
+                out[idx] = row
+        return pd.Series(out)
+
+    _proj.__annotations__ = {"s": pd.Series, "return": pd.Series}
+    return pandas_udf(_proj, "array<double>")(v)
+
+
+def _jl_coords_expr(v: Column, planes, dim: int, scale: int) -> Column:
+    """Oracle-shaped twin of :func:`_jl_coords_arrow`: pure Column
+    expressions, no Python workers."""
+    div = float(scale) * math.sqrt(len(planes))
     q = F.transform(v, lambda x: F.round(x * scale, 0).cast("bigint"))
     coords = [
         F.round(
@@ -1760,12 +1748,9 @@ def jl_project(
         for p in planes
     ]
     # NULL / wrong-dim / element-null-or-NaN vectors → NULL projection
-    # (matches the arrow impl's validity mask exactly)
+    # (matches the arrow kernel's validity mask exactly)
     clean = ~F.exists(v, lambda x: x.isNull() | F.isnan(x))
-    return df.withColumn(
-        out_col,
-        F.when(v.isNotNull() & (F.size(v) == dim) & clean, F.array(*coords)),
-    )
+    return F.when(v.isNotNull() & (F.size(v) == dim) & clean, F.array(*coords))
 
 
 def jl_project_sql(
@@ -1803,16 +1788,14 @@ def kmeans_quantized(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     scale: int = 10000,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Fully DISTRIBUTED Lloyd's k-means on the integer grid (X51) —
     the clustering primitive for topic-balancing and diversity
     sampling that the sampled-centroid IVF trainer (ivf_topk) cannot
     provide: every iteration sees the WHOLE corpus, not a driver-side
     sample. The corpus never reaches the driver; the only driver
-    traffic is the k·dim-integer centroid relation once per round in
-    the arrow impl (the bounded CC-scalar class), and none at all in
-    the expr impl.
+    traffic is the k·dim-integer centroid relation once per round (the
+    bounded CC-scalar class).
 
     Deterministic and bit-portable by construction:
 
@@ -1830,17 +1813,16 @@ def kmeans_quantized(
     Grid quantization perturbs each coordinate by < 1/scale, the same
     approximation the x9p/x50 family already accepts for portability.
 
-    ``impl="arrow"`` (default) assigns WITHOUT the pair join: the
-    k-row centroid relation is collected (k·dim ints) and embedded in
-    one vectorized |a|²−2a·C+|C|² int64 kernel, so the corpus crosses
-    Arrow once per round instead of k times as duplicated pair rows —
-    the interpreted HOF fold over pair rows made the expr impl
-    pathological at 100× data (>18 min at sf10 vs seconds; the x50
-    lesson squared by the join). Bit-identical results (exact int64,
-    first-minimum argmin == lowest-cell tie-break; equivalence
-    test-pinned). ``impl="expr"`` keeps the pure Column form — zero
-    Python, zero driver traffic — for oracle-shaped plans and modest
-    inputs.
+    Assignment runs WITHOUT the pair join (:func:`_kmeans_assign_arrow`):
+    the k-row centroid relation is collected (k·dim ints) and embedded
+    in one vectorized |a|²−2a·C+|C|² int64 kernel, so the corpus
+    crosses Arrow once per round instead of k times as duplicated pair
+    rows — the interpreted HOF fold over pair rows made the pure Column
+    form pathological at 100× data (>18 min at sf10 vs seconds; the
+    x50 lesson squared by the join). That form stays as the
+    oracle-shaped twin :func:`_kmeans_assign_expr` — zero Python, zero
+    driver traffic; bit-identical results (exact int64, first-minimum
+    argmin == lowest-cell tie-break; equivalence test-pinned).
 
     Returns (cell, n_members, inertia, centroid ARRAY<BIGINT> on the
     grid) — divide by ``scale`` for real-space centroids.
@@ -1851,7 +1833,7 @@ def kmeans_quantized(
     # NULL / wrong-dim / element-null-or-NaN vectors are excluded up
     # front (visible via the member counts, never an error): unguarded
     # they crash the arrow kernel's np.vstack (or garble the int64
-    # cast via NaN), poison the expr struct-min with NULL distances,
+    # cast via NaN), poison the twin's struct-min with NULL distances,
     # and can even be chosen as seed centroids
     clean = ~F.exists(v, lambda x: x.isNull() | F.isnan(x))
     q = df.filter(v.isNotNull() & (F.size(v) == dim) & clean).select(
@@ -1883,65 +1865,9 @@ def kmeans_quantized(
             [(i, list(r["q"])) for i, r in enumerate(seeds)],
             "cell bigint, c array<bigint>",
         )
-        if impl not in ("arrow", "expr"):
-            raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
-
-        def _arrow_assign(cent_rows):
-            """Assignment WITHOUT the pair join: centroids (k·dim ints,
-            the bounded CC-scalar driver class) are embedded in one
-            vectorized kernel; the corpus crosses Arrow ONCE per round
-            (its q column in, two scalars out) instead of k times as
-            duplicated pair rows. np.argmin returns the FIRST minimum
-            → the same lowest-cell tie-break as the struct-min."""
-            import numpy as np
-            import pandas as pd
-            from pyspark.sql.functions import pandas_udf
-
-            # sort by cell: np.argmin's first-minimum rule then equals
-            # the struct-min's lowest-cell tie-break (collect order of
-            # a checkpointed aggregate is arbitrary)
-            cent_rows = sorted(cent_rows, key=lambda r: r["cell"])
-            cells = np.array([r["cell"] for r in cent_rows], dtype=np.int64)
-            C = np.vstack([list(r["c"]) for r in cent_rows]).astype(np.int64)
-
-            def _assign(qs):
-                if len(qs) == 0:
-                    return pd.DataFrame({"d": [], "cell": []})
-                a = np.vstack(qs.to_numpy()).astype(np.int64)
-                # d2[i,j] = |a_i|² - 2 a_i·C_j + |C_j|², all int64 exact
-                d2 = (
-                    (a * a).sum(axis=1, keepdims=True)
-                    - 2 * (a @ C.T)
-                    + (C * C).sum(axis=1)
-                )
-                j = d2.argmin(axis=1)
-                return pd.DataFrame(
-                    {"d": d2[np.arange(len(a)), j], "cell": cells[j]}
-                )
-
-            _assign.__annotations__ = {"qs": pd.Series, "return": pd.DataFrame}
-            return pandas_udf(_assign, "d bigint, cell bigint")(F.col("q"))
-
-        dist = F.aggregate(
-            F.zip_with(F.col("q"), F.col("c"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
         assigned = None
         for _ in range(n_iter):
-            if impl == "arrow":
-                assigned = (
-                    q.withColumn("dc", _arrow_assign(cents.collect()))
-                    .select("_id", "q", F.col("dc.d").alias("d"), F.col("dc.cell").alias("cell"))
-                )
-            else:
-                assigned = (
-                    q.crossJoin(F.broadcast(cents))
-                    .select("_id", "q", F.struct(dist.alias("d"), F.col("cell")).alias("dc"))
-                    .groupBy("_id")
-                    .agg(F.min("dc").alias("dc"), F.first("q").alias("q"))
-                    .select("_id", "q", F.col("dc.d").alias("d"), F.col("dc.cell").alias("cell"))
-                )
+            assigned = _kmeans_assign_arrow(q, cents)
             cents = assigned.groupBy("cell").agg(
                 F.array(
                     *[
@@ -1975,3 +1901,57 @@ def kmeans_quantized(
         )
     finally:
         q.unpersist()
+
+
+def _kmeans_assign_arrow(q: DataFrame, cents: DataFrame) -> DataFrame:
+    """One assignment round of :func:`kmeans_quantized` WITHOUT the pair
+    join: ``q`` = (_id, q), ``cents`` = (cell, c). The centroids (k·dim
+    ints, the bounded CC-scalar driver class) are collected and
+    embedded in one vectorized kernel; the corpus crosses Arrow ONCE
+    per round (its q column in, two scalars out) instead of k times as
+    duplicated pair rows. np.argmin returns the FIRST minimum → the
+    same lowest-cell tie-break as the twin's struct-min. Returns
+    (_id, q, d, cell)."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    # sort by cell: np.argmin's first-minimum rule then equals the
+    # struct-min's lowest-cell tie-break (collect order of a
+    # checkpointed aggregate is arbitrary)
+    cent_rows = sorted(cents.collect(), key=lambda r: r["cell"])
+    cells = np.array([r["cell"] for r in cent_rows], dtype=np.int64)
+    C = np.vstack([list(r["c"]) for r in cent_rows]).astype(np.int64)
+
+    def _assign(qs):
+        if len(qs) == 0:
+            return pd.DataFrame({"d": [], "cell": []})
+        a = np.vstack(qs.to_numpy()).astype(np.int64)
+        # d2[i,j] = |a_i|² - 2 a_i·C_j + |C_j|², all int64 exact
+        d2 = (a * a).sum(axis=1, keepdims=True) - 2 * (a @ C.T) + (C * C).sum(axis=1)
+        j = d2.argmin(axis=1)
+        return pd.DataFrame({"d": d2[np.arange(len(a)), j], "cell": cells[j]})
+
+    _assign.__annotations__ = {"qs": pd.Series, "return": pd.DataFrame}
+    dc = pandas_udf(_assign, "d bigint, cell bigint")(F.col("q"))
+    return q.withColumn("dc", dc).select(
+        "_id", "q", F.col("dc.d").alias("d"), F.col("dc.cell").alias("cell")
+    )
+
+
+def _kmeans_assign_expr(q: DataFrame, cents: DataFrame) -> DataFrame:
+    """Oracle-shaped twin of :func:`_kmeans_assign_arrow`: broadcast
+    cross join against the k centroids, lexicographic struct-min over
+    (distance, cell) per row."""
+    dist = F.aggregate(
+        F.zip_with(F.col("q"), F.col("c"), lambda a, b: (a - b) * (a - b)),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
+    return (
+        q.crossJoin(F.broadcast(cents))
+        .select("_id", "q", F.struct(dist.alias("d"), F.col("cell")).alias("dc"))
+        .groupBy("_id")
+        .agg(F.min("dc").alias("dc"), F.first("q").alias("q"))
+        .select("_id", "q", F.col("dc.d").alias("d"), F.col("dc.cell").alias("cell"))
+    )

@@ -2239,38 +2239,26 @@ def x57b_substring_dedup_pruned(spark, sf_dir):
 
 
 def _x57c_sql() -> str:
-    """Oracle twin of the substring-dedup dial's r12 DEFAULT: the
-    exact branch, short-circuited with no probe. The r6-era density
-    dispatch was re-measured on the r12 tree and the pruned branch is
-    dominated at every operating point (BASELINE.md §Round 12), so
-    ``dedup_substrings_auto``'s default emits exactly the x57 body —
-    this oracle pins that short-circuit end-to-end; the legacy numeric
-    dial (probe + CASE dispatch) stays covered by the forced-branch
-    property tests and the crossover unit test."""
+    """Oracle twin of X57auto: the exact body, so ``_x57_sql``."""
     return _x57_sql()
 
 
 @query("x57c_substring_dedup_auto", _x57c_sql())
 def x57c_substring_dedup_auto(spark, sf_dir):
     """X57auto as a declared query (r7 verdict task 2; re-dialed r12):
-    the dial between X57's exact stride-1 substring dedup and X57b's
-    winnow-pruned form. Since r12 the DEFAULT short-circuits to the
-    exact branch with no probe — the pruned branch measured dominated
-    at every operating point on the current tree (sf0.1 8.6% density:
-    2.34 vs 4.01 s; sf10 31%: 13.6 vs 18.6 s; synthetic 1-15%
-    short/long-doc corpora all the same way — receipts in BASELINE.md
-    §Round 12), so the probe would be pure overhead (~2/3 of the exact
-    pass at sf10). This query pins the short-circuit: auto's default
-    output must hash-match the exact body. A numeric density_cutoff
-    keeps the legacy measured dial (property- and unit-tested).
-    Reference parity: the pick-the-cheap-path-automatically pattern of
-    findMatchingObjects (src/index.ts:1237-1366)."""
-    from rehiver_spark.operators.textops import dedup_substrings_auto
+    the choice between X57's exact stride-1 substring dedup and X57b's
+    winnow-pruned form. The pruned branch measured dominated at every
+    operating point on the r12 tree (sf0.1 8.6% density: 2.34 vs
+    4.01 s; sf10 31%: 13.6 vs 18.6 s; synthetic 1-15% short/long-doc
+    corpora all the same way — receipts in BASELINE.md §Round 12), so
+    the engine always runs the exact form and this query pins that:
+    its output must hash-match the exact body. Reference parity: the
+    pick-the-cheap-path-automatically pattern of findMatchingObjects
+    (src/index.ts:1237-1366)."""
+    from rehiver_spark.operators.textops import dedup_substrings
 
     d = tables(spark, sf_dir, ["documents"])["documents"]
-    out = dedup_substrings_auto(
-        d, window_tokens=_SSD_L, min_run=_SSD_R
-    )
+    out = dedup_substrings(d, window_tokens=_SSD_L)
     return out.select(
         "doc_id",
         F.substring(F.sha2(F.col("cleaned_text"), 256), 1, 16).alias(

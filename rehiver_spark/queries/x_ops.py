@@ -1495,7 +1495,7 @@ def x22b_semdedup_scaled(spark, sf_dir):
     oracle re-derives; since round 8 the Spark side computes both
     stages as bit-equivalent Arrow kernels (map-only assignment, one
     applyInPandas prior-max per cell — vectorops.py), with the
-    relational twin kept as impl='expr'. The cap is the operator's
+    relational twins kept for the tests. The cap is the operator's
     separate skew hardening, test-pinned in tests/test_vectorops.py."""
     corpus = _perturbed_embeddings(spark, sf_dir)
     out = semdedup(corpus, threshold=0.9, n_cells=None, max_cell_rows=None)

@@ -67,8 +67,9 @@ def write_bucketed(
     sort_cols: list[str] | None = None,
     mode: str = "overwrite",
     fmt: str = "parquet",
+    path: str | None = None,
 ) -> None:
-    """Bucketed managed-table write — the co-located-join primitive.
+    """Bucketed table write — the co-located-join primitive.
 
     Two tables bucketed on the same keys with the same bucket count
     join WITHOUT a shuffle: each task reads matching bucket files from
@@ -78,13 +79,28 @@ def write_bucketed(
     write, then every downstream join of these tables is exchange-free
     (verified by plan test: no Exchange above either scan).
 
+    The input is repartitioned on the bucket columns first, so every
+    bucket is exactly ONE file: without it each write task emits a
+    file per bucket, and Spark reports a bucketed scan's ``sortBy``
+    order only for single-file buckets — which the session's
+    ``legacy.bucketedTableScan.outputOrdering`` default relies on to
+    skip the sort-merge join's Sort.
+
     Bucketing requires the session catalog (``saveAsTable``); plain
     ``.save(path)`` silently drops bucket specs — that is a Spark
-    constraint, not a choice.
+    constraint, not a choice. ``path`` makes it an external table
+    whose files live there (the catalog entry still names it).
     """
-    w = df.write.mode(mode).format(fmt).bucketBy(n_buckets, *bucket_cols)
+    w = (
+        df.repartition(n_buckets, *bucket_cols)
+        .write.mode(mode)
+        .format(fmt)
+        .bucketBy(n_buckets, *bucket_cols)
+    )
     if sort_cols:
         w = w.sortBy(*sort_cols)
+    if path is not None:
+        w = w.option("path", path)
     w.saveAsTable(table)
 
 

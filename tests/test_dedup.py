@@ -268,7 +268,7 @@ def test_simhash_signatures_tie_bits_match_column_form(spark):
     assert rel[3] == rel[1]  # doubling the multiset doubles ones and n
 
 
-def test_jaccard_prefix_equals_blocking(spark):
+def test_jaccard_prefix_equals_blocking(spark, expr_twins):
     from pyspark.sql import functions as F
 
     from rehiver_spark.operators.dedup import jaccard_pairs, shingles
@@ -283,15 +283,16 @@ def test_jaccard_prefix_equals_blocking(spark):
     ]
     df = spark.createDataFrame(texts, "doc_id bigint, text string")
     sh = df.select("doc_id", shingles("text", 3).alias("shingles"))
+    def pairs(t):
+        return {
+            (r["id_a"], r["id_b"], r["n_common"])
+            for r in jaccard_pairs(sh, threshold=t).collect()
+        }
+
     for t in (0.5, 0.8):
-        p = {
-            (r["id_a"], r["id_b"], r["n_common"])
-            for r in jaccard_pairs(sh, threshold=t, method="prefix").collect()
-        }
-        b = {
-            (r["id_a"], r["id_b"], r["n_common"])
-            for r in jaccard_pairs(sh, threshold=t, method="blocking").collect()
-        }
+        p = pairs(t)
+        with expr_twins():
+            b = pairs(t)
         assert p == b and p, f"threshold {t}: prefix={p} blocking={b}"
 
 
@@ -332,7 +333,7 @@ def test_connected_components_long_chain_converges(spark):
     assert {r.cluster_id for r in got} == {0}
 
 
-def test_connected_components_driver_matches_distributed(spark):
+def test_connected_components_driver_matches_distributed(spark, expr_twins):
     """The round-10 driver branch (vectorized min-label over Arrow-
     collected edges) reaches the identical fixpoint as the distributed
     loop on a random multi-component graph — the dispatch is a cost
@@ -351,12 +352,13 @@ def test_connected_components_driver_matches_distributed(spark):
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     drv = {
         (r.doc_id, r.cluster_id)
-        for r in connected_components(pairs, impl="driver").collect()
+        for r in connected_components(pairs).collect()
     }
-    dist = {
-        (r.doc_id, r.cluster_id)
-        for r in connected_components(pairs, impl="distributed").collect()
-    }
+    with expr_twins():
+        dist = {
+            (r.doc_id, r.cluster_id)
+            for r in connected_components(pairs).collect()
+        }
     assert drv == dist and drv
 
 
@@ -371,7 +373,7 @@ def test_connected_components_driver_string_ids(spark):
     )
     got = {
         (r.doc_id, r.cluster_id)
-        for r in connected_components(pairs, impl="driver").collect()
+        for r in connected_components(pairs).collect()
     }
     assert got == {
         ("doc-a", "doc-a"), ("doc-b", "doc-a"), ("doc-c", "doc-a"),
@@ -379,27 +381,30 @@ def test_connected_components_driver_string_ids(spark):
     }
 
 
-def test_connected_components_auto_cap_dispatch(spark):
-    """auto: at or below the edge cap the driver branch runs; above it
-    the distributed loop does. Both answers are equal either way."""
+def test_connected_components_auto_cap_dispatch(spark, monkeypatch):
+    """At or below the edge cap the driver branch runs; above it the
+    distributed loop does. Both answers are equal either way."""
+    from rehiver_spark.operators import dedup
     from rehiver_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
     )
     # 3 undirected pairs symmetrize to 6 directed edges; cap=1 -> 2 < 6
+    monkeypatch.setattr(dedup, "_CC_DRIVER_EDGE_CAP", 1)
     big = {
         (r.doc_id, r.cluster_id)
-        for r in connected_components(pairs, driver_edge_cap=1).collect()
+        for r in connected_components(pairs).collect()
     }
+    monkeypatch.setattr(dedup, "_CC_DRIVER_EDGE_CAP", 10)
     small = {
         (r.doc_id, r.cluster_id)
-        for r in connected_components(pairs, driver_edge_cap=10).collect()
+        for r in connected_components(pairs).collect()
     }
     assert big == small == {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
 
 
-def test_connected_components_null_ids_dropped_both_branches(spark):
+def test_connected_components_null_ids_dropped_both_branches(spark, expr_twins):
     """A NULL id in the pair list is dropped up front (r10 advice):
     before the fix the driver branch crashed in np.unique while the
     distributed branch silently ignored the edge — behavior diverged
@@ -411,21 +416,26 @@ def test_connected_components_null_ids_dropped_both_branches(spark):
         "id_a string, id_b string",
     )
     want = {("a", "a"), ("b", "a"), ("e", "e"), ("f", "e")}
-    for impl in ("driver", "distributed"):
-        got = {
+
+    def clusters():
+        return {
             (r.doc_id, r.cluster_id)
-            for r in connected_components(pairs, impl=impl).collect()
+            for r in connected_components(pairs).collect()
         }
-        assert got == want, impl
+
+    assert clusters() == want, "driver"
+    with expr_twins():
+        assert clusters() == want, "distributed"
 
 
-def test_connected_components_byte_aware_cap(spark, caplog):
-    """auto + string ids scales the row cap down by probed id width:
+def test_connected_components_byte_aware_cap(spark, caplog, monkeypatch):
+    """String ids scale the row cap down by probed id width:
     wide string ids must push a graph that row-counts under the cap
     onto the distributed branch (the 16 B/row driver-memory rationale
     assumes int64 ids — r10 advice)."""
     import logging
 
+    from rehiver_spark.operators import dedup
     from rehiver_spark.operators.dedup import connected_components
 
     wide = "x" * 200  # 2*200+16 bytes/row vs int64's 16 -> cap/27
@@ -433,13 +443,14 @@ def test_connected_components_byte_aware_cap(spark, caplog):
         [(wide + "1", wide + "2"), (wide + "2", wide + "3")],
         "id_a string, id_b string",
     )
-    # 2 undirected pairs -> 4 directed edges. driver_edge_cap=2 would
-    # admit 4 rows for int64 ids, but the width probe shrinks it below
-    # 4, so this must take (and succeed on) the distributed branch.
+    # 2 undirected pairs -> 4 directed edges. A cap of 2 would admit
+    # 4 rows for int64 ids, but the width probe shrinks it below 4, so
+    # this must take (and succeed on) the distributed branch.
+    monkeypatch.setattr(dedup, "_CC_DRIVER_EDGE_CAP", 2)
     with caplog.at_level(logging.INFO, logger="rehiver_spark.operators.dedup"):
         got = {
             (r.doc_id, r.cluster_id)
-            for r in connected_components(pairs, driver_edge_cap=2).collect()
+            for r in connected_components(pairs).collect()
         }
     assert any("-> distributed" in m for m in caplog.messages)
     assert got == {
@@ -449,7 +460,7 @@ def test_connected_components_byte_aware_cap(spark, caplog):
     }
 
 
-def test_jaccard_blocking_leaves_no_persisted_rdds(spark):
+def test_jaccard_blocking_leaves_no_persisted_rdds(spark, expr_twins):
     """The non-default blocking baseline must not leak executor storage:
     its returned plan is lazy, so an in-function persist could never be
     unpersisted (round-3 advice item, operators/dedup.py)."""
@@ -465,7 +476,8 @@ def test_jaccard_blocking_leaves_no_persisted_rdds(spark):
         "doc_id bigint, text string",
     )
     sh = df.select("doc_id", shingles("text", 3).alias("shingles"))
-    jaccard_pairs(sh, threshold=0.5, method="blocking").collect()
+    with expr_twins():
+        jaccard_pairs(sh, threshold=0.5).collect()
     # other tests' caches may be GC-cleaned concurrently (ids can
     # DISAPPEAR); the invariant is that this call ADDS none
     new = persisted_ids() - before
@@ -654,7 +666,7 @@ def test_incremental_banding_agrees_with_batch_lsh(spark):
     assert got == straddling and straddling
 
 
-def test_jaccard_methods_agree_with_hot_filter(spark):
+def test_jaccard_methods_agree_with_hot_filter(spark, expr_twins):
     """With max_shingle_freq set, BOTH methods must define Jaccard over
     the filtered sets — sizes from the unfiltered arrays made blocking
     return a different pair set than prefix."""
@@ -671,9 +683,10 @@ def test_jaccard_methods_agree_with_hot_filter(spark):
     )
     kw = dict(threshold=0.4, max_shingle_freq=3)
     p = {(r["id_a"], r["id_b"], round(r["jaccard"], 9))
-         for r in jaccard_pairs(df, method="prefix", **kw).collect()}
-    b = {(r["id_a"], r["id_b"], round(r["jaccard"], 9))
-         for r in jaccard_pairs(df, method="blocking", **kw).collect()}
+         for r in jaccard_pairs(df, **kw).collect()}
+    with expr_twins():
+        b = {(r["id_a"], r["id_b"], round(r["jaccard"], 9))
+             for r in jaccard_pairs(df, **kw).collect()}
     assert p == b
 
 
@@ -883,7 +896,7 @@ def test_minhash_est_gate_auto_margin(docs):
         minhash_neardup_pairs(docs, est_gate_margin="wide")
 
 
-def test_jaccard_prefix_length_filter_keeps_boundary_pairs(spark):
+def test_jaccard_prefix_length_filter_keeps_boundary_pairs(spark, expr_twins):
     """r13 PPJoin+ length filter must be lossless at the exact
     threshold boundary: |A|=5, |B|=4 sharing 4 shingles has
     J = 4/5 = 0.8 — kept at t=0.8 (ceil(0.8*5)=4 <= |B|; a naive
@@ -905,12 +918,11 @@ def test_jaccard_prefix_length_filter_keeps_boundary_pairs(spark):
     }
     assert got == {(1, 2): 0.8}
     # and the filter agrees with the blocking baseline on the same input
-    base = {
-        (r["id_a"], r["id_b"]): round(r["jaccard"], 6)
-        for r in jaccard_pairs(
-            df, "doc_id", "shingles", threshold=0.8, method="blocking"
-        ).collect()
-    }
+    with expr_twins():
+        base = {
+            (r["id_a"], r["id_b"]): round(r["jaccard"], 6)
+            for r in jaccard_pairs(df, "doc_id", "shingles", threshold=0.8).collect()
+        }
     assert got == base
 
 

@@ -538,3 +538,34 @@ def test_column_regex_exact_classes_exhaustive_vs_live_bash():
         if (regs[p].fullmatch(k) is not None) is not (bit == "1")
     ]
     assert not bad, f"{len(bad)} regex/bash disagreements, first 10: {bad[:10]}"
+
+
+def test_glob_all_equals_path_matcher_all(spark):
+    """glob_all compiles each pattern exactly as glob_match does (fast
+    startswith/endswith form, rlike, or the exact ``!()`` matcher) and
+    must agree with the driver-side PathMatcher.all row by row — for a
+    dot=True fast-form list, a hard ``!()`` pattern, nocase=True and
+    the vacuous empty list."""
+    from rehiver_spark.functions.globs import PathMatcher, glob_all
+
+    keys = [
+        "logs/a.txt", "logs/.hidden/b.txt", "logs/x/y/c.txt", "logs.txt",
+        "other/a.txt", "LOGS/D.TXT", "logs/e.TXT", "bb", "ab", "abb", "cbb",
+    ]
+    df = spark.createDataFrame([(k,) for k in keys], "key string")
+    cases = [
+        (["logs/**/*.txt", "**/*.txt"], True, False),  # fast form, dot=True
+        (["*b", "!(a|b*)b*"], False, False),  # hard '!()' class
+        (["logs/**", "**/*.txt"], False, True),  # nocase
+        ([], False, False),
+    ]
+    for patterns, dot, nocase in cases:
+        got = {
+            r["key"]: r["m"]
+            for r in df.select(
+                "key", glob_all("key", patterns, dot=dot, nocase=nocase).alias("m")
+            ).collect()
+        }
+        m = PathMatcher(dot=dot, nocase=nocase)
+        want = {k: m.all(k, patterns) for k in keys}
+        assert got == want, (patterns, dot, nocase)

@@ -440,7 +440,7 @@ def test_x16_arrow_stats_pass_is_map_only(spark):
     from rehiver_spark.operators.textops import repetition_stats
 
     d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    p = plan_of(repetition_stats(d, impl="arrow"))
+    p = plan_of(repetition_stats(d))
     for node in ("HashAggregate", "SortMergeJoin", "Window", "CartesianProduct"):
         assert node not in p
 

@@ -264,7 +264,7 @@ HARD_TEXTS = st.lists(
 
 @settings(max_examples=8, deadline=None)
 @given(HARD_TEXTS)
-def test_repetition_arrow_equals_expr_property(spark, texts):
+def test_repetition_arrow_equals_expr_property(spark, expr_twins, texts):
     """The round-8 Arrow repetition kernel must be bit-identical to the
     expression form on ADVERSARIAL text: mixed ASCII whitespace runs
     (Java \\s), NBSP (which Java counts as \\S), astral code points,
@@ -279,8 +279,9 @@ def test_repetition_arrow_equals_expr_property(spark, texts):
         "top_token_frac", "top_bigram_frac",
     ]
     key = lambda r: tuple(r[c] for c in cols)  # noqa: E731
-    a = sorted(map(key, repetition_stats(df, impl="arrow").collect()))
-    e = sorted(map(key, repetition_stats(df, impl="expr").collect()))
+    a = sorted(map(key, repetition_stats(df).collect()))
+    with expr_twins():
+        e = sorted(map(key, repetition_stats(df).collect()))
     assert a == e
 
 
@@ -471,58 +472,6 @@ def test_merge_once_equals_classical_greedy_random(spark, seqs, pair):
         assert got[i] == _ref_greedy(s, pair), (s, pair)
 
 
-@settings(max_examples=6, deadline=None)
-@given(st.lists(_DOC, min_size=2, max_size=8))
-def test_auto_dedup_output_equals_its_chosen_branch(spark, docs):
-    """X57 auto-dial (r7): forcing each side of the density cutoff
-    must reproduce the corresponding branch bit-for-bit on ANY corpus
-    — cutoff below any possible density (−1) ⇒ exact form, cutoff
-    above any possible density (1.1) ⇒ pruned form. The dispatcher
-    adds no semantics of its own."""
-    from rehiver_spark.operators.textops import (
-        dedup_substrings,
-        dedup_substrings_auto,
-        dedup_substrings_pruned,
-    )
-
-    L = 4
-    df = spark.createDataFrame(
-        list(enumerate(docs)), "doc_id long, text string"
-    )
-    key = lambda r: (  # noqa: E731
-        r["doc_id"],
-        r["cleaned_text"],
-        r["n_tokens_before"],
-        r["n_tokens_after"],
-        r["n_cut_spans"],
-    )
-    forced_exact = sorted(
-        map(
-            key,
-            dedup_substrings_auto(
-                df, window_tokens=L, min_run=L + 3, density_cutoff=-1.0
-            ).collect(),
-        )
-    )
-    assert forced_exact == sorted(
-        map(key, dedup_substrings(df, window_tokens=L).collect())
-    )
-    forced_pruned = sorted(
-        map(
-            key,
-            dedup_substrings_auto(
-                df, window_tokens=L, min_run=L + 3, density_cutoff=1.1
-            ).collect(),
-        )
-    )
-    assert forced_pruned == sorted(
-        map(
-            key,
-            dedup_substrings_pruned(df, window_tokens=L, min_run=L + 3).collect(),
-        )
-    )
-
-
 @settings(max_examples=20, deadline=None)
 @given(
     st.integers(1, 24),
@@ -605,7 +554,7 @@ def test_adaptive_match_blocks_properties(n, h, sig_bits):
     ),
     st.booleans(),
 )
-def test_connected_components_impls_agree_property(spark, edges, as_str):
+def test_connected_components_impls_agree_property(spark, expr_twins, edges, as_str):
     """Driver and distributed CC are the same fixpoint on arbitrary
     small graphs — int and string ids both (string exercises the r11
     join-based convergence path)."""
@@ -620,13 +569,15 @@ def test_connected_components_impls_agree_property(spark, edges, as_str):
     df = spark.createDataFrame(rows, schema) if rows else spark.createDataFrame(
         [], schema
     )
-    got = {}
-    for impl in ("driver", "distributed"):
-        got[impl] = sorted(
+    def clusters():
+        return sorted(
             (r.doc_id, r.cluster_id)
-            for r in connected_components(df, impl=impl).collect()
+            for r in connected_components(df).collect()
         )
-    assert got["driver"] == got["distributed"]
+
+    driver = clusters()
+    with expr_twins():
+        assert clusters() == driver
 
 
 @settings(max_examples=8, deadline=None)

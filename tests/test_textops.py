@@ -801,7 +801,7 @@ def test_dedup_substrings_pruned_rejects_bad_min_run(spark):
         dedup_substrings_pruned(df, window_tokens=10, min_run=9)
 
 
-def test_dedup_substrings_pruned_arrow_equals_expr(spark):
+def test_dedup_substrings_pruned_arrow_equals_expr(spark, expr_twins):
     """The Arrow selection kernel must be bit-identical to the pure
     Column form (np.argmin first-minimum == array_position first
     occurrence), on the real corpus."""
@@ -815,22 +815,17 @@ def test_dedup_substrings_pruned_arrow_equals_expr(spark):
         r["n_tokens_after"],
         r["n_cut_spans"],
     )
-    a = sorted(
-        map(
-            key,
-            dedup_substrings_pruned(
-                df, window_tokens=15, min_run=29, impl="arrow"
-            ).collect(),
+    def run():
+        return sorted(
+            map(
+                key,
+                dedup_substrings_pruned(df, window_tokens=15, min_run=29).collect(),
+            )
         )
-    )
-    e = sorted(
-        map(
-            key,
-            dedup_substrings_pruned(
-                df, window_tokens=15, min_run=29, impl="expr"
-            ).collect(),
-        )
-    )
+
+    a = run()
+    with expr_twins():
+        e = run()
     assert a == e
 
 
@@ -861,12 +856,12 @@ def test_repetition_stats_whitespace_only_docs_emit_no_row(spark):
     assert rows[0]["n_tokens"] == 4
 
 
-def test_dedup_substrings_pruned_arrow_handles_string_ids(spark):
+def test_dedup_substrings_pruned_arrow_handles_string_ids(spark, expr_twins):
     """r6 advisor (low): the arrow path hard-coded the id column as
     long (np.int64 cast + 'long' in the mapInPandas schema), crashing
-    on string doc ids that the expr impl and the exact form accept.
-    The schema now echoes the input id type; both impls must agree on
-    a string-id corpus."""
+    on string doc ids that the expr twin and the exact form accept.
+    The schema now echoes the input id type; kernel and twin must
+    agree on a string-id corpus."""
     from rehiver_spark.operators.textops import dedup_substrings_pruned
 
     run = " ".join(f"w{i}" for i in range(30))
@@ -879,125 +874,40 @@ def test_dedup_substrings_pruned_arrow_handles_string_ids(spark):
         "doc_id string, text string",
     )
     key = lambda r: tuple(r)  # noqa: E731
-    got = {
-        impl: sorted(
+
+    def run():
+        return sorted(
             map(
                 key,
-                dedup_substrings_pruned(
-                    df, window_tokens=10, min_run=20, impl=impl
-                ).collect(),
+                dedup_substrings_pruned(df, window_tokens=10, min_run=20).collect(),
             )
         )
-        for impl in ("arrow", "expr")
-    }
+
+    got = {"arrow": run()}
+    with expr_twins():
+        got["expr"] = run()
     assert got["arrow"] == got["expr"]
     assert {r[0] for r in got["expr"]} == {"doc-a", "doc-b", "doc-c"}
 
 
-def test_dedup_substrings_auto_crossover_decisions(spark, caplog):
-    """The LEGACY numeric dial's decision logic on the two regimes it
-    was built for (r6 verdict task 3; since r12 reached only via an
-    explicit density_cutoff): sparse duplication → pruned branch (and
-    on a corpus whose only duplication is SHORTER than min_run, that
-    choice is visible in the output — the short dup survives, where
-    exact would cut it); dense duplication → exact branch (logged),
-    because nearly every doc would go through the exact pipeline
-    anyway."""
-    import logging
-
-    from rehiver_spark.operators.textops import (
-        dedup_substrings,
-        dedup_substrings_auto,
-    )
-
-    L, R = 5, 15  # w = 11: candidate guarantee needs a 15-token run
-    short_dup = "s1 s2 s3 s4 s5 s6"  # 6-token shared run: L ≤ 6 < R
-    sparse = spark.createDataFrame(
-        [
-            (1, short_dup + " " + " ".join(f"a{i}" for i in range(20))),
-            (2, " ".join(f"b{i}" for i in range(20)) + " " + short_dup),
-            (3, " ".join(f"c{i}" for i in range(26))),
-            (4, " ".join(f"d{i}" for i in range(26))),
-        ],
-        "doc_id long, text string",
-    )
-    with caplog.at_level(logging.INFO, "rehiver_spark.operators.textops"):
-        caplog.clear()
-        got = {
-            r["doc_id"]: r["n_tokens_after"]
-            for r in dedup_substrings_auto(
-                sparse, window_tokens=L, min_run=R, density_cutoff=0.2
-            ).collect()
-        }
-        assert "-> pruned branch" in caplog.text
-    # pruned semantics: no doc is a candidate, the short dup survives
-    assert got[2] == 26
-    exact = {
-        r["doc_id"]: r["n_tokens_after"]
-        for r in dedup_substrings(sparse, window_tokens=L).collect()
-    }
-    assert exact[2] == 20  # exact WOULD have cut it — the dial matters
-    long_run = " ".join(f"z{i}" for i in range(18))  # ≥ min_run tokens
-    dense = spark.createDataFrame(
-        [
-            (1, long_run + " one extra"),
-            (2, "prefix " + long_run),
-            (3, long_run),
-            (4, " ".join(f"u{i}" for i in range(12))),
-        ],
-        "doc_id long, text string",
-    )
-    with caplog.at_level(logging.INFO, "rehiver_spark.operators.textops"):
-        caplog.clear()
-        out = dedup_substrings_auto(
-            dense, window_tokens=L, min_run=R, density_cutoff=0.2
-        )
-        rows = {r["doc_id"]: r["n_tokens_after"] for r in out.collect()}
-        assert "-> exact branch" in caplog.text  # density 3/4 > 0.2
-    assert rows == {
-        r["doc_id"]: r["n_tokens_after"]
-        for r in dedup_substrings(dense, window_tokens=L).collect()
-    }
-    # r12 default (density_cutoff=None): short-circuits to exact with
-    # NO probe — identical output to the exact form on BOTH corpora,
-    # including the sparse one where the legacy dial picks pruned
-    with caplog.at_level(logging.INFO, "rehiver_spark.operators.textops"):
-        caplog.clear()
-        short = {
-            r["doc_id"]: r["n_tokens_after"]
-            for r in dedup_substrings_auto(
-                sparse, window_tokens=L, min_run=R
-            ).collect()
-        }
-        assert "no probe run" in caplog.text
-    assert short == exact  # the default follows exact semantics now
-
-
-def test_x57c_query_matches_dispatched_branch(spark, caplog):
+def test_x57c_query_matches_dispatched_branch(spark):
     """The REGISTERED auto-dial query (x57c, round 8; re-dialed r12)
-    must emit exactly what the exact branch emits — since r12 the
-    default short-circuits to exact with no probe (the pruned branch
-    measured dominated at every operating point), so the query is
-    pinned against x57's output at the query shape the driver actually
-    runs (same L/R constants, same sha16 projection)."""
-    import logging
-
+    must emit exactly what the exact form emits — the pruned branch
+    measured dominated at every operating point, so the engine always
+    runs exact, and the query is pinned against x57's output at the
+    query shape the driver actually runs (same sha16 projection)."""
     from rehiver_spark.queries import QUERIES, load_all
 
     load_all()
     sf = "/root/testdata/sf0.001"
-    with caplog.at_level(logging.INFO, "rehiver_spark.operators.textops"):
-        caplog.clear()
-        got = sorted(
-            map(tuple, QUERIES["x57c_substring_dedup_auto"](spark, sf).collect())
-        )
-        assert "dedup_substrings_auto" in caplog.text
-        assert "no probe run" in caplog.text  # the r12 short-circuit
+    got = sorted(
+        map(tuple, QUERIES["x57c_substring_dedup_auto"](spark, sf).collect())
+    )
     want = sorted(map(tuple, QUERIES["x57_substring_dedup"](spark, sf).collect()))
     assert got == want
 
 
-def test_repetition_stats_arrow_equals_expr(spark):
+def test_repetition_stats_arrow_equals_expr(spark, expr_twins):
     """The round-8 Arrow repetition kernel (JVM-normalized text →
     split/factorize/np.unique stats) must reproduce the expression
     form bit-for-bit on the real corpus plus the edge rows: empty /
@@ -1030,16 +940,15 @@ def test_repetition_stats_arrow_equals_expr(spark):
         "top_token_frac", "top_bigram_frac",
     ]
     key = lambda r: tuple(r[c] for c in cols)  # noqa: E731
-    a = sorted(map(key, repetition_stats(src, impl="arrow").collect()))
-    e = sorted(map(key, repetition_stats(src, impl="expr").collect()))
+    a = sorted(map(key, repetition_stats(src).collect()))
+    with expr_twins():
+        e = sorted(map(key, repetition_stats(src).collect()))
     assert a == e
     got = {r[0]: r for r in a}
     assert not {900002, 900003, 900004} & set(got)
     assert got[900001] == (900001, 1, 1.0, 1.0, 1.0)
     assert got[900005] == (900005, 4, 0.5, 0.75, 2 / 3)
     assert got[900009][1] == 1
-    with pytest.raises(ValueError, match="impl"):
-        repetition_stats(src, impl="bogus")
 
 
 def test_charlm_score_arrow_equals_join(spark):

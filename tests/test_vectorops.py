@@ -298,7 +298,7 @@ def test_semdedup_auto_cap_respects_external_centroids(spark):
     assert sorted(pops.values()) == [50, 50, 50, 50]
 
 
-def test_semdedup_arrow_assignment_equals_expr(spark):
+def test_semdedup_arrow_assignment_equals_expr(spark, expr_twins):
     """The round-8 Arrow assignment (collected clamp-bounded centroids,
     sequential per-dimension accumulation, argmax-first tiebreak) must
     reproduce the broadcast-join + window form bit-for-bit — including
@@ -325,17 +325,16 @@ def test_semdedup_arrow_assignment_equals_expr(spark):
         r["vec_id"], r["cell_id"], r["max_prior_cosine"], r["keep"]
     )
     kw = dict(n_cells=None, max_cell_rows=None)
-    a = sorted(map(key, semdedup(corpus, impl="arrow", **kw).collect()))
-    x = sorted(map(key, semdedup(corpus, impl="expr", **kw).collect()))
+    a = sorted(map(key, semdedup(corpus, **kw).collect()))
+    with expr_twins():
+        x = sorted(map(key, semdedup(corpus, **kw).collect()))
     assert a == x
-    # the zero vector lands in the smallest cell in both impls
+    # the zero vector lands in the smallest cell on both paths
     zero_cell = dict((r[0], r[1]) for r in a)[990001]
     assert zero_cell == min(r[1] for r in a)
-    with pytest.raises(ValueError, match="impl"):
-        semdedup(corpus, impl="bogus")
 
 
-def test_semdedup_arrow_keeps_nan_cosines_nan(spark):
+def test_semdedup_arrow_keeps_nan_cosines_nan(spark, expr_twins):
     """An inf input element rides through l2_normalize as a NaN vector
     position, so its pair cosines are NaN — Spark's max sorts NaN
     greatest and coalesce passes NaN through (keep=false). The kernel
@@ -355,8 +354,9 @@ def test_semdedup_arrow_keeps_nan_cosines_nan(spark):
     )
     key = lambda r: tuple(r)  # noqa: E731
     kw = dict(threshold=0.9, n_cells=1, max_cell_rows=None)
-    a = sorted(map(key, semdedup(corpus, impl="arrow", **kw).collect()))
-    x = sorted(map(key, semdedup(corpus, impl="expr", **kw).collect()))
+    a = sorted(map(key, semdedup(corpus, **kw).collect()))
+    with expr_twins():
+        x = sorted(map(key, semdedup(corpus, **kw).collect()))
     assert [
         (r[0], r[1], "nan" if math.isnan(r[2]) else r[2], r[3]) for r in a
     ] == [
@@ -369,7 +369,7 @@ def test_semdedup_arrow_keeps_nan_cosines_nan(spark):
     assert by[1][2] == -1.0 and by[1][3] is True
 
 
-def test_semdedup_arrow_ignores_null_centroid(spark):
+def test_semdedup_arrow_ignores_null_centroid(spark, expr_twins):
     """An externally-fitted centroid table containing a NULL vector
     must never capture a row (expr: NULL score sorts last) — the arrow
     kernel models it as a −inf column."""
@@ -384,17 +384,14 @@ def test_semdedup_arrow_ignores_null_centroid(spark):
         "cell_id bigint, _centv array<double>",
     )
     key = lambda r: tuple(r)  # noqa: E731
-    a = sorted(
-        map(key, semdedup(corpus, centroids=cents, impl="arrow").collect())
-    )
-    x = sorted(
-        map(key, semdedup(corpus, centroids=cents, impl="expr").collect())
-    )
+    a = sorted(map(key, semdedup(corpus, centroids=cents).collect()))
+    with expr_twins():
+        x = sorted(map(key, semdedup(corpus, centroids=cents).collect()))
     assert a == x
     assert not any(r[1] == 1 for r in a)  # the NULL centroid owns nothing
 
 
-def test_semdedup_arrow_mixed_dims_equals_expr(spark):
+def test_semdedup_arrow_mixed_dims_equals_expr(spark, expr_twins):
     """Round-9 advisor fix: one malformed-length embedding used to
     raise PythonException in _prior_max_arrow (np.vstack on a ragged
     list) while the expr twin degraded gracefully (zip_with pads →
@@ -417,8 +414,9 @@ def test_semdedup_arrow_mixed_dims_equals_expr(spark):
     key = lambda r: tuple(r)  # noqa: E731
     for n_cells in (1, 2):
         kw = dict(threshold=0.9, n_cells=n_cells, max_cell_rows=None)
-        a = sorted(map(key, semdedup(corpus, impl="arrow", **kw).collect()))
-        x = sorted(map(key, semdedup(corpus, impl="expr", **kw).collect()))
+        a = sorted(map(key, semdedup(corpus, **kw).collect()))
+        with expr_twins():
+            x = sorted(map(key, semdedup(corpus, **kw).collect()))
         assert a == x, f"n_cells={n_cells}"
     # n_cells=1: every row shares one cell, so the prior-max must run
     # per LENGTH GROUP: dim-2 rows only see lower-id dim-2 members
@@ -427,7 +425,7 @@ def test_semdedup_arrow_mixed_dims_equals_expr(spark):
     assert by[5][2] == -1.0 and by[6][2] == -1.0  # invalid: no prior
 
 
-def test_semdedup_arrow_mixed_dim_centroids_equals_expr(spark):
+def test_semdedup_arrow_mixed_dim_centroids_equals_expr(spark, expr_twins):
     """Round-9 advisor fix for _assign_cells_arrow: the old kernel set
     d = max centroid dim, so one oversized centroid in an external
     table collapsed every normal-dim row into the smallest cell. The
@@ -450,12 +448,9 @@ def test_semdedup_arrow_mixed_dim_centroids_equals_expr(spark):
         "cell_id bigint, _centv array<double>",
     )
     key = lambda r: tuple(r)  # noqa: E731
-    a = sorted(
-        map(key, semdedup(corpus, centroids=cents, impl="arrow").collect())
-    )
-    x = sorted(
-        map(key, semdedup(corpus, centroids=cents, impl="expr").collect())
-    )
+    a = sorted(map(key, semdedup(corpus, centroids=cents).collect()))
+    with expr_twins():
+        x = sorted(map(key, semdedup(corpus, centroids=cents).collect()))
     assert a == x
     by = {r[0]: r for r in a}
     # dim-2 rows score only against the dim-2 centroid — NOT the
@@ -565,9 +560,9 @@ def test_lsh_paths_tolerate_null_and_zero_vectors(spark):
     assert gotp == {(1, 2)}
 
 
-def test_lsh_paths_exclude_ragged_dim_vectors(spark):
+def test_lsh_paths_exclude_ragged_dim_vectors(spark, lsh_kernel, expr_twins):
     """A vector violating the `dim` contract is excluded up front on
-    BOTH impls: before round 10 a ragged row crashed the batched plane
+    BOTH verify paths: before round 10 a ragged row crashed the batched plane
     matmul on the arrow path but silently zero-bucketed on the expr
     twin (zip_with NULL-pads) — divergent behavior for the same bad
     input."""
@@ -584,15 +579,19 @@ def test_lsh_paths_exclude_ragged_dim_vectors(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     for fn in (lsh_cosine_neardup, lsh_cosine_neardup_portable):
-        for impl in ("arrow", "expr"):
-            got = {
+
+        def pairs():
+            return {
                 (r["id_a"], r["id_b"])
-                for r in fn(df, dim=3, threshold=0.9, impl=impl).collect()
+                for r in fn(df, dim=3, threshold=0.9).collect()
             }
-            assert got == {(1, 2)}, (fn.__name__, impl)
+
+        assert pairs() == {(1, 2)}, (fn.__name__, "arrow")
+        with expr_twins():
+            assert pairs() == {(1, 2)}, (fn.__name__, "expr")
 
 
-def test_lsh_verify_arrow_equals_expr(spark, sf_dir):
+def test_lsh_verify_arrow_equals_expr(spark, sf_dir, lsh_kernel, expr_twins):
     """Round-9 scale fix: the within-bucket Arrow verification (the
     default — the relational verify materialized pop² candidate rows
     × two dim-sized vectors and died on sf10's hot bucket) must equal
@@ -614,13 +613,14 @@ def test_lsh_verify_arrow_equals_expr(spark, sf_dir):
         )
 
     for fn in (lsh_cosine_neardup, lsh_cosine_neardup_portable):
-        a = canon(fn(emb, dim=64, threshold=0.4, impl="arrow").collect())
-        x = canon(fn(emb, dim=64, threshold=0.4, impl="expr").collect())
+        a = canon(fn(emb, dim=64, threshold=0.4).collect())
+        with expr_twins():
+            x = canon(fn(emb, dim=64, threshold=0.4).collect())
         assert a == x and len(a) > 0, fn.__name__
 
 
 def test_lsh_auto_dispatch_probes_sum_pop2(spark, sf_dir, monkeypatch):
-    """impl='auto' (the default) must take the cheap relational join on
+    """The Σpop² dispatch must take the cheap relational join on
     a small bucket histogram and the within-bucket kernel above the
     byte threshold — and both branches must return identical rows."""
     import rehiver_spark.operators.vectorops as vo
@@ -640,13 +640,13 @@ def test_lsh_auto_dispatch_probes_sum_pop2(spark, sf_dir, monkeypatch):
     # small histogram → expr branch, kernel never invoked
     auto = key(vo.lsh_cosine_neardup(emb, dim=64, threshold=0.4).collect())
     assert not calls
-    # forced-low threshold → auto must dispatch to the kernel, same rows
+    # forced-low threshold → the dispatch must pick the kernel, same rows
     monkeypatch.setattr(vo, "_LSH_EXPR_VERIFY_MAX_BYTES", 0)
     auto_arrow = key(vo.lsh_cosine_neardup(emb, dim=64, threshold=0.4).collect())
     assert calls and auto_arrow == auto and len(auto) > 0
 
 
-def test_lsh_verify_arrow_nan_cosine_survives_like_expr(spark):
+def test_lsh_verify_arrow_nan_cosine_survives_like_expr(spark, lsh_kernel, expr_twins):
     """Spark's comparison semantics treat NaN as greater than any
     numeric, so a NaN cosine (an inf element riding through
     l2_normalize) passes ``>= threshold`` in the expr form and must
@@ -669,10 +669,13 @@ def test_lsh_verify_arrow_nan_cosine_survives_like_expr(spark):
             return "nan"
         return round(c, 9)
 
-    out = {}
-    for impl in ("arrow", "expr"):
-        got = lsh_cosine_neardup(df, dim=3, threshold=0.9, impl=impl).collect()
-        out[impl] = sorted((r["id_a"], r["id_b"], tag(r["cosine"])) for r in got)
+    def pairs():
+        got = lsh_cosine_neardup(df, dim=3, threshold=0.9).collect()
+        return sorted((r["id_a"], r["id_b"], tag(r["cosine"])) for r in got)
+
+    out = {"arrow": pairs()}
+    with expr_twins():
+        out["expr"] = pairs()
     assert out["arrow"] == out["expr"]
     # the near-dup pair survives, and NaN rows (if the buckets collide)
     # are NaN on both paths — never NULL
@@ -753,7 +756,9 @@ def test_lsh_adaptive_population_bounded_two_scales(spark):
             assert max(counts) <= 16 * mean, (n, t, max(counts))
 
 
-def test_lsh_bucket_split_and_coalesce_equal_unsplit(spark, sf_dir, monkeypatch):
+def test_lsh_bucket_split_and_coalesce_equal_unsplit(
+    spark, sf_dir, monkeypatch, lsh_kernel
+):
     """The block-pair split of over-cap buckets and the small-bucket
     coalescing are COST dials, not semantics: forcing every bucket to
     split (cap=7, odd block sizes) and squeezing all buckets into 3
@@ -769,22 +774,24 @@ def test_lsh_bucket_split_and_coalesce_equal_unsplit(spark, sf_dir, monkeypatch)
         return sorted((r["id_a"], r["id_b"], repr(r["cosine"])) for r in rows)
 
     base = canon(
-        vo.lsh_cosine_neardup(emb, dim=64, threshold=0.4, impl="arrow").collect()
+        vo.lsh_cosine_neardup(emb, dim=64, threshold=0.4).collect()
     )
     assert len(base) > 0
     monkeypatch.setattr(vo, "_LSH_BUCKET_SPLIT_CAP", 7)
     split = canon(
-        vo.lsh_cosine_neardup(emb, dim=64, threshold=0.4, impl="arrow").collect()
+        vo.lsh_cosine_neardup(emb, dim=64, threshold=0.4).collect()
     )
     assert split == base
     monkeypatch.setattr(vo, "_LSH_VERIFY_COALESCE_GROUPS", 3)
     coalesced = canon(
-        vo.lsh_cosine_neardup(emb, dim=64, threshold=0.4, impl="arrow").collect()
+        vo.lsh_cosine_neardup(emb, dim=64, threshold=0.4).collect()
     )
     assert coalesced == base
 
 
-def test_lsh_verify_arrow_duplicate_ids_drop_self_pairs_like_expr(spark):
+def test_lsh_verify_arrow_duplicate_ids_drop_self_pairs_like_expr(
+    spark, lsh_kernel, expr_twins
+):
     """r10 advisor (low): the kernel used POSITIONAL upper-triangle
     pairing, so duplicate _id values emitted (id, id) pairs the expr
     twin's id_a < id_b filter drops. The kernel now compares ids (via
@@ -803,10 +810,13 @@ def test_lsh_verify_arrow_duplicate_ids_drop_self_pairs_like_expr(spark):
         (3, [0.0, 1.0, 0.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    out = {}
-    for impl in ("arrow", "expr"):
-        got = lsh_cosine_neardup(df, dim=3, threshold=0.9, impl=impl).collect()
-        out[impl] = {(r["id_a"], r["id_b"], repr(r["cosine"])) for r in got}
+    def pairs():
+        got = lsh_cosine_neardup(df, dim=3, threshold=0.9).collect()
+        return {(r["id_a"], r["id_b"], repr(r["cosine"])) for r in got}
+
+    out = {"arrow": pairs()}
+    with expr_twins():
+        out["expr"] = pairs()
     assert out["arrow"] == out["expr"]
     assert all(p[0] != p[1] for p in out["arrow"])
     assert any(p[:2] == (1, 2) for p in out["arrow"])
@@ -876,20 +886,21 @@ def test_jl_project_is_map_only_and_portable(spark):
     assert sp == dd
 
 
-def test_jl_arrow_and_expr_paths_are_bit_identical(spark):
+def test_jl_arrow_and_expr_paths_are_bit_identical(spark, expr_twins):
     """The Arrow matmul fast path must equal the pure Column-expression
     form on the real embeddings table, row for row."""
     from rehiver_spark.operators.vectorops import jl_project
 
     df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a = sorted(
-        (r["vec_id"], tuple(r["proj"]))
-        for r in jl_project(df, 64, 16, impl="arrow").collect()
-    )
-    b = sorted(
-        (r["vec_id"], tuple(r["proj"]))
-        for r in jl_project(df, 64, 16, impl="expr").collect()
-    )
+    def run():
+        return sorted(
+            (r["vec_id"], tuple(r["proj"]))
+            for r in jl_project(df, 64, 16).collect()
+        )
+
+    a = run()
+    with expr_twins():
+        b = run()
     assert a == b
 
 
@@ -950,27 +961,28 @@ def test_kmeans_quantized_matches_pure_python_reference_exactly(spark):
     assert got == ref
 
 
-def test_kmeans_centroids_never_collected(spark):
-    """No driver-materialized relation in either impl — the loop is
+def test_kmeans_centroids_never_collected(spark, expr_twins):
+    """No driver-materialized relation on either path — the loop is
     DataFrame-only end to end. (``Scan ExistingRDD`` is expected: it
     is the executor-side localCheckpoint of the k-row centroid
     relation, not a collect; a collect-and-recreate would surface as
-    LocalTableScan.) The expr impl additionally runs with zero Python
-    evaluation; the arrow impl's only Python is the vectorized
+    LocalTableScan.) The expr twin additionally runs with zero Python
+    evaluation; the kernel path's only Python is the vectorized
     distance kernel."""
     from rehiver_spark.operators.vectorops import kmeans_quantized
 
     df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    pe = (
-        kmeans_quantized(df, dim=64, k=4, n_iter=2, impl="expr")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    with expr_twins():
+        pe = (
+            kmeans_quantized(df, dim=64, k=4, n_iter=2)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
     assert "LocalTableScan" not in pe
     assert "ArrowEvalPython" not in pe and "BatchEvalPython" not in pe
     pa = (
-        kmeans_quantized(df, dim=64, k=4, n_iter=2, impl="arrow")
+        kmeans_quantized(df, dim=64, k=4, n_iter=2)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -978,18 +990,19 @@ def test_kmeans_centroids_never_collected(spark):
     assert "LocalTableScan" not in pa and "BatchEvalPython" not in pa
 
 
-def test_kmeans_arrow_and_expr_impls_are_bit_identical(spark):
+def test_kmeans_arrow_and_expr_impls_are_bit_identical(spark, expr_twins):
     from rehiver_spark.operators.vectorops import kmeans_quantized
 
     df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a = sorted(
-        (r["cell"], r["n_members"], r["inertia"], tuple(r["c"]))
-        for r in kmeans_quantized(df, dim=64, k=6, n_iter=3, impl="arrow").collect()
-    )
-    b = sorted(
-        (r["cell"], r["n_members"], r["inertia"], tuple(r["c"]))
-        for r in kmeans_quantized(df, dim=64, k=6, n_iter=3, impl="expr").collect()
-    )
+    def run():
+        return sorted(
+            (r["cell"], r["n_members"], r["inertia"], tuple(r["c"]))
+            for r in kmeans_quantized(df, dim=64, k=6, n_iter=3).collect()
+        )
+
+    a = run()
+    with expr_twins():
+        b = run()
     assert a == b
 
 
@@ -1029,9 +1042,9 @@ def test_ann_recall_query_reports_honest_partial_probe_recall(spark):
     assert 0.4 <= mean <= 1.0, mean
 
 
-def test_jl_and_kmeans_tolerate_null_vectors(spark):
+def test_jl_and_kmeans_tolerate_null_vectors(spark, expr_twins):
     """Regression: a NULL (or wrong-dim) embedding must not crash the
-    Arrow kernels — JL projects it to NULL in BOTH impls, k-means
+    Arrow kernels — JL projects it to NULL on BOTH paths, k-means
     excludes it from clustering (visible via member counts)."""
     from rehiver_spark.operators.vectorops import jl_project, kmeans_quantized
 
@@ -1041,17 +1054,21 @@ def test_jl_and_kmeans_tolerate_null_vectors(spark):
         "vec_id long, embedding array<double>",
     )
     df = good.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding")).unionByName(bad)
-    for impl in ("arrow", "expr"):
-        rows = {r["vec_id"]: r["proj"] for r in jl_project(df, 64, 8, impl=impl).collect()}
-        assert rows[9001] is None and rows[9002] is None, impl
-        assert all(v is not None for k, v in rows.items() if k < 9000), impl
+    def check(path):
+        rows = {r["vec_id"]: r["proj"] for r in jl_project(df, 64, 8).collect()}
+        assert rows[9001] is None and rows[9002] is None, path
+        assert all(v is not None for k, v in rows.items() if k < 9000), path
+
+    check("arrow")
+    with expr_twins():
+        check("expr")
     km = kmeans_quantized(df, dim=64, k=4, n_iter=2)
     assert sum(r["n_members"] for r in km.collect()) == 30
 
 
-def test_jl_and_kmeans_tolerate_element_nulls(spark):
+def test_jl_and_kmeans_tolerate_element_nulls(spark, expr_twins):
     """Regression (round-5 review): a vector with a NULL ELEMENT must
-    project to NULL in BOTH JL impls (Arrow delivers element nulls as
+    project to NULL on BOTH JL paths (Arrow delivers element nulls as
     NaN, which turned the int64 cast into garbage in the arrow kernel
     while expr returned nulls — silently divergent), and k-means must
     exclude it."""
@@ -1065,9 +1082,11 @@ def test_jl_and_kmeans_tolerate_element_nulls(spark):
     df = good.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     ).unionByName(holed)
-    for impl in ("arrow", "expr"):
-        rows = {r["vec_id"]: r["proj"] for r in jl_project(df, 64, 8, impl=impl).collect()}
-        assert rows[9005] is None, impl
+    rows = {r["vec_id"]: r["proj"] for r in jl_project(df, 64, 8).collect()}
+    assert rows[9005] is None, "arrow"
+    with expr_twins():
+        rows = {r["vec_id"]: r["proj"] for r in jl_project(df, 64, 8).collect()}
+    assert rows[9005] is None, "expr"
     km = kmeans_quantized(df, dim=64, k=4, n_iter=2)
     assert sum(r["n_members"] for r in km.collect()) == 20
 

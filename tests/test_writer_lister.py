@@ -122,19 +122,31 @@ def test_objects_datasource(spark):
     assert df.filter(F.col("key").endswith(".json")).select("key").count() == 1
 
 
-def test_bucketed_join_is_shuffle_free(spark):
+def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     """The co-located-join claim, verified in the physical plan: both
-    sides bucketed on the join key → no Exchange above either scan."""
+    sides bucketed on the join key → no Exchange above either scan,
+    and (one sorted file per bucket, from a multi-partition input) no
+    Sort either."""
     from rehiver_spark.sources.writer import write_bucketed
 
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
+    li = (
+        spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+        .select("l_orderkey", "l_quantity")
+        .repartition(4)
     )
-    o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
+    o = (
+        spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+        .select("o_orderkey", "o_totalprice")
+        .repartition(4)
     )
-    write_bucketed(li, "t_li_bkt", ["l_orderkey"], 8, sort_cols=["l_orderkey"])
+    li_path = str(tmp_path / "li")
+    write_bucketed(
+        li, "t_li_bkt", ["l_orderkey"], 8, sort_cols=["l_orderkey"], path=li_path
+    )
     write_bucketed(o, "t_o_bkt", ["o_orderkey"], 8, sort_cols=["o_orderkey"])
+    # external table: files land at `path`, exactly one per bucket
+    files = [f for f in os.listdir(li_path) if f.endswith(".parquet")]
+    assert len(files) == 8, files
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -144,6 +156,7 @@ def test_bucketed_join_is_shuffle_free(spark):
         p = j._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in p
         assert "Exchange" not in p  # bucket co-location: NO shuffle either side
+        assert "Sort [" not in p  # single-file buckets report their order
         # correctness unchanged vs the unbucketed join
         assert j.count() == li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).count()
     finally:
